@@ -179,6 +179,7 @@ class RssSampler:
         self.tree = tree
         self.interval = interval
         self.peak = {"total": 0.0, "driver": 0.0, "jvm": 0.0, "pyworker": 0.0}
+        self.max_workers = 0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._loop, daemon=True)
 
@@ -192,6 +193,7 @@ class RssSampler:
             self._stop.wait(self.interval)
 
     def sample(self, workers: list[int]) -> None:
+        self.max_workers = max(self.max_workers, len(workers))
         r = self.tree.rss_mb(workers)
         r["total"] = sum(r.values())
         for k, v in r.items():

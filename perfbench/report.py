@@ -66,6 +66,12 @@ def emit(run, args, info: dict, out_dir: Path) -> dict:
     print(f"# inputs {json.dumps(info, sort_keys=True)}", flush=True)
     walls = [f"{b[0]} {b[1] - a[1]:.1f}" for a, b in zip(run.phases, run.phases[1:])]
     print(f"# phases (wall s): {', '.join(walls)}", flush=True)
+    v = run.values
+    print(f"# peak rss (MB): driver {v['proc.driver_rss_peak_mb']:.0f}, jvm "
+          f"{v['proc.jvm_rss_peak_mb']:.0f}, python workers {v['proc.pyworker_rss_peak_mb']:.0f} "
+          f"(at most {v['proc.max_workers']} processes)", flush=True)
+    for kind, xs in run.warm_lat.items():
+        print(f"# warm-up {kind} (s): {' '.join(f'{x:.3f}' for x in xs)}", flush=True)
     for kind, xs in run.lat.items():
         print(f"# samples {kind} (s): {' '.join(f'{x:.3f}' for x in xs)}", flush=True)
     for name, v in e2e.items():

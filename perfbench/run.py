@@ -1,6 +1,6 @@
 """sparktext benchmark entry point.
 
-    python3 perfbench/run.py --workload fixture-serve --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload fixture-serve --seed 1 --seconds 20 --trace 0
 
 Run it from the root of a sparktext checkout. It starts one local Spark
 session (``local[nproc]``, shuffle partitions = nproc, driver heap sized
@@ -132,6 +132,7 @@ def main() -> None:
         run.values["session.cache_entries_leaked"] = persistent_rdds(spark)
         info["host_steal_frac"] = round(steal_frac(cpu0, cpu_times()), 4)
         sampler.stop()
+        run.values["proc.max_workers"] = sampler.max_workers
         peak, sampler = sampler.peak, None
         run.values.update({
             "setup_s": setup_s,

@@ -27,12 +27,15 @@ K = 10
 
 #: Sizes and op mixes. A cycle string lists one round of op kinds in the
 #: order they run (s=search, p=phrase, f=facet, b=batch); its letter
-#: counts are the shares. ``min`` is the fewest samples per kind a timed
-#: window takes, whatever its length: single facet samples spread too
-#: widely across runs for a median to mean anything.
+#: counts are the shares. ``warmup`` is the untimed ops per kind run first:
+#: the first call of a kind costs 2-3x a warm one, and the second batch
+#: still 10-20% more than the third. ``min`` is the fewest samples per kind
+#: a timed window takes, whatever its length.
 FIXTURE = {"docs": 5000, "cycle": "sfpbsfspss", "batch_size": 20,
-           "min": {"search": 2, "facet": 2, "phrase": 1, "batch": 1}}
+           "warmup": {"search": 1, "facet": 1, "phrase": 1, "batch": 2},
+           "min": {"search": 2, "facet": 2, "phrase": 1, "batch": 2}}
 ZIPF = {"docs": 6000, "cycle": "sfbsfbsfbs", "batch_size": 25,
+        "warmup": {"search": 1, "facet": 1, "batch": 2},
         "min": {"search": 2, "facet": 2, "batch": 2}}
 INGEST = {"base_docs": 1000, "batch_docs": 250, "searches": 3}
 
@@ -58,6 +61,7 @@ class Run:
         self.attempted = 0
         self.failures: list[str] = []
         self.lat: dict[str, list[float]] = defaultdict(list)
+        self.warm_lat: dict[str, list[float]] = defaultdict(list)
         self.batch_queries = 0
         self.batch_wall = 0.0
         self.layer: dict[str, list[float]] = defaultdict(list)
@@ -163,6 +167,7 @@ class Run:
         if reason is not None:
             self.fail(label, reason)
         if not record:
+            self.warm_lat[op.kind].append(t1 - t0)
             return
         self.lat[op.kind].append(t1 - t0)
         if op.kind == "batch":
@@ -254,18 +259,17 @@ class Run:
 
     def closed_loop(self, index, oracle: Oracle, corpus: gen.Corpus, seed: int,
                     spec: dict, stream: str, seconds: float) -> None:
-        """One untimed op of each kind (batches of 2 queries: the warm-up
-        is for code paths, not volume), then the timed loop for
-        ``seconds`` of wall time and until every kind has run its ``min``
-        ops."""
-        warm = gen.op_stream(corpus, seed, f"{stream}.warmup", spec["cycle"], 2)
-        seen: set[str] = set()
-        for op in warm:
-            if op.kind not in seen:
-                seen.add(op.kind)
-                self.op(op, index, oracle, record=False, prefix="warmup.")
-            if len(seen) == len(set(spec["cycle"])):
+        """Untimed full-size warm-up ops (``spec["warmup"]`` per kind),
+        then the timed loop for ``seconds`` of wall time and until every
+        kind has run its ``min`` ops."""
+        left = dict(spec["warmup"])
+        for op in gen.op_stream(corpus, seed, f"{stream}.warmup", spec["cycle"],
+                                spec["batch_size"]):
+            if not any(left.values()):
                 break
+            if left[op.kind]:
+                left[op.kind] -= 1
+                self.op(op, index, oracle, record=False, prefix="warmup.")
         self.phase("warmup")
         ops = gen.op_stream(corpus, seed, stream, spec["cycle"], spec["batch_size"])
         t_end = time.perf_counter() + seconds
