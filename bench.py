@@ -55,11 +55,11 @@ def main() -> None:
         idle = vals[3] + (vals[4] if len(vals) > 4 else 0)  # idle + iowait
         return sum(vals) - idle, sum(vals)
 
-    # Warmup (NOT timed), mirroring tools/scaling_bench.py: fork one
-    # python worker per slot (cold pandas/numpy/sparktext imports are ~2s
-    # each) and JIT the scan path. Measured: the FIRST build in a session
-    # costs ~8s at sf0.1, the second ~0.9s — the difference is session
-    # warmup, not engine work, and a steady-state engine amortizes it.
+    # Warmup (NOT timed): fork one python worker per slot (cold
+    # pandas/numpy/sparktext imports are ~2s each) and JIT the scan
+    # path. Measured: the FIRST build in a session costs ~8s at sf0.1,
+    # the second ~0.9s — the difference is session warmup, not engine
+    # work, and a steady-state engine amortizes it.
     def _warm(batches):
         import sparktext.build  # noqa: F401
 
@@ -134,12 +134,18 @@ def main() -> None:
     # WAND pruning evidence: candidate blocks vs total blocks for the
     # OR query (results proven identical in tests/test_wand.py).
     from sparktext.query import parse_query, postings_for_terms
-    from sparktext.score import term_stats, wand_candidate_blocks
+    from sparktext.score import term_stats, wand_blocks_for_batch
+
+    def kept_blocks(idx, qstr, sm, total):
+        # forced pruning of one query (a batch of one); None = keeps all
+        q = parse_query(qstr)
+        kept = wand_blocks_for_batch(idx, {"q": q}, 10, sm, q.scored_terms, 0)
+        return kept.count() if kept is not None else total
 
     wq = parse_query("query window scan").scored_terms
     sm = term_stats(index, wq)
     wand_total = postings_for_terms(index, wq, sm).count()
-    wand_kept = wand_candidate_blocks(index, wq, 10, sm).count()
+    wand_kept = kept_blocks(index, "query window scan", sm, wand_total)
 
     # Regex query (B7 dictionary expansion via broadcast join).
     from sparktext.query import regex_docs
@@ -167,7 +173,7 @@ def main() -> None:
     zq = ["alpha", "beta", "gamma"]
     zsm = term_stats(zidx, zq)
     zipf_total = postings_for_terms(zidx, zq, zsm).count()
-    zipf_kept = wand_candidate_blocks(zidx, zq, 10, zsm).count()
+    zipf_kept = kept_blocks(zidx, "alpha beta gamma", zsm, zipf_total)
 
     def zsearch(exhaustive):
         return top_k(
@@ -183,7 +189,6 @@ def main() -> None:
     # evidence is blocks decoded, not local wall time.
     from sparktext.query import parse_query as _pq
     from sparktext.query import search_many as _sm
-    from sparktext.score import wand_blocks_for_batch
 
     zqs = {
         "zb0": "alpha", "zb1": "beta", "zb2": "gamma",

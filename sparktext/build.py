@@ -41,7 +41,6 @@ on re-run (see :func:`build_index` ``resume``).
 from __future__ import annotations
 
 import math
-import time
 from dataclasses import dataclass
 from dataclasses import field as dc_field
 from typing import Iterator
@@ -95,6 +94,9 @@ class Index:
     positions: DataFrame | None = None  # segment_id, term, doc_id, positions
     deleted: DataFrame | None = None  # doc_id
     _headers: DataFrame | None = None  # lazy block-header mini-cache
+    #: build intermediates the index's frames read through (the fused
+    #: build output, or the positions path's corpus and token rows)
+    _build_caches: list = dc_field(default_factory=list)
     #: optional facet postings (tantivy `facet` field): same block codec
     #: as ``postings`` but terms are '/a/b' ancestor paths; see with_facets
     facet_postings: DataFrame | None = None
@@ -129,13 +131,13 @@ class Index:
 
     def unpersist(self) -> None:
         """Release every cache this index holds (postings, doc_meta,
-        term_dict, positions, tombstones, the header mini-cache). For
-        benchmarks and multi-index sessions: a retired index's caches
-        otherwise keep competing for executor storage memory with the
-        live one's."""
+        term_dict, positions, tombstones, the header mini-cache, the
+        build intermediates). For benchmarks and multi-index sessions: a
+        retired index's caches otherwise keep competing for executor
+        storage memory with the live one's."""
         for df in (self.doc_meta, self.postings, self.term_dict,
                    self.positions, self.deleted, self._headers,
-                   self.facet_postings):
+                   self.facet_postings, *self._build_caches):
             if df is not None:
                 try:
                     df.unpersist()
@@ -154,7 +156,7 @@ class Index:
             deleted=new_del.persist(), facet_postings=self.facet_postings,
             facet_expr=self.facet_expr, facet_depth=self.facet_depth,
             # tombstones don't touch the term dictionary: share the memo
-            _tstats=self._tstats,
+            _tstats=self._tstats, _build_caches=self._build_caches,
         )
 
 
@@ -528,17 +530,12 @@ def build_index(
     resume: bool = False,
     num_groups: int = 1,
     with_positions: bool = False,
-    phase_walls: dict | None = None,
 ) -> Index:
     """Build the full index from a canonical corpus DataFrame.
 
     In-memory mode (``index_dir=None``): returns an :class:`Index` whose
     DataFrames are persisted (MEMORY_AND_DISK). Persisted mode: writes the
     A12 layout with manifest/metrics and supports ``resume``.
-
-    ``phase_walls``: optional dict the build fills with per-phase
-    wall-clock seconds (driver-side twin of the _metrics lineage table;
-    used by tools/scaling_bench.py to attribute scaling loss per phase).
     """
     if index_dir is not None:
         from sparktext.manifest import build_persistent_index
@@ -551,13 +548,10 @@ def build_index(
 
     if num_segments is None:
         num_segments = max(4, spark.sparkContext.defaultParallelism)
-    pw = phase_walls if phase_walls is not None else {}
-    t0 = time.time()
     assigned = "doc_id" not in corpus.columns
     _id_caches: list = []
     corpus = assign_doc_ids(corpus, num_segments, keep_pid=assigned, _cache_out=_id_caches)
     n_docs = corpus.count()
-    pw["assign_count"] = round(time.time() - t0, 3)
     seg_size = max(1, math.ceil(n_docs / num_segments))
     if assigned:
         # The doc-id assignment's window already co-located each range
@@ -596,6 +590,7 @@ def build_index(
             )
             .persist()
         )
+        build_caches = [corpus, tokens]
         posting_rows = tokens.filter(F.col("kind") == 0).drop("kind")
         meta_rows = tokens.filter(F.col("kind") == 1).select("doc_id", "doc_len")
         positions = posting_rows.select("segment_id", "term", "doc_id", "positions").persist()
@@ -612,6 +607,7 @@ def build_index(
             .mapInPandas(_build_segment_partition, schema=_FUSED_SCHEMA)
             .persist()
         )
+        build_caches = [fused]
         # ONE cache holds the build output: postings/doc_meta are filter
         # views over it. Cache writes are the one build phase that does
         # NOT scale with cores (MemoryStore contention measured 2x slower
@@ -658,16 +654,15 @@ def build_index(
 
     # First action on the fused pipeline: materializes shuffle + tokenize
     # + encode + persist, then the tiny stats aggregate reads the cache.
-    t0 = time.time()
     total_tokens = meta_rows.agg(F.sum("doc_len")).collect()[0][0] or 0
-    pw["tokenize_encode"] = round(time.time() - t0, 3)
     # The fused/tokens cache is materialized now; the doc-id assignment's
     # ranged cache has served its purpose — release it.
     for c in _id_caches:
         c.unpersist()
     stats = IndexStats(num_docs=n_docs, total_tokens=int(total_tokens))
     return Index(doc_meta=doc_meta, postings=postings, term_dict=term_dict,
-                 stats=stats, n_buckets=n_buckets, positions=positions)
+                 stats=stats, n_buckets=n_buckets, positions=positions,
+                 _build_caches=build_caches)
 
 
 def facet_posting_rows(doc_meta: DataFrame, facet_expr: str, depth: int | None) -> DataFrame:
@@ -793,5 +788,5 @@ def with_facets(
         deleted=index.deleted, facet_postings=fp,
         facet_expr=expr_attr, facet_depth=depth,
         # facets don't touch the text term dictionary: share the memo
-        _tstats=index._tstats,
+        _tstats=index._tstats, _build_caches=index._build_caches,
     )

@@ -16,24 +16,31 @@ scores 3x apple there and 2x here. Reachable only by duplicate-term
 queries; per-clause additive scoring would force per-clause rows
 through the shared (doc, term) partial stage for no mainstream gain.
 
+Quoted phrases (``"a b"``, ``"a b"~2``, ``+"a b"``, ``-"a b"``) are
+clauses like any term: each distinct ``(phrase, slop)`` clause becomes
+a pseudo-term whose rows are the docs :func:`phrase_docs` matches and
+whose partial is the phrase score (B6).
+
 Matching semantics (tantivy BooleanQuery):
-- only SHOULD clauses: a doc matches if it contains >= 1 should term;
-- any MUST clauses: a doc must contain ALL must terms; should terms are
-  optional and only add score;
+- only SHOULD clauses: a doc matches if it contains >= 1 should clause;
+- any MUST clauses: a doc must match ALL must clauses; should clauses
+  are optional and only add score;
 - MUST_NOT: excluded docs, never scored.
-Scores: sum of per-(doc, term) BM25 partials over should+must terms (B3).
+Scores: sum of per-(doc, clause) partials over should+must clauses (B3).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sparktext import codec
-from sparktext.score import bm25_score_col, term_stats
+from sparktext.score import (
+    B, K1, _boost_mult_col, _decoded_norm_col, bm25_score_col, term_stats,
+)
 from sparktext.tokenizer import tokenize_text
 
 
@@ -132,28 +139,78 @@ def postings_for_terms(index, terms: list[str], stats_map: dict | None = None) -
 
 
 #: Cost-based WAND gate: below this many candidate postings (sum of the
-#: query terms' doc_freq), block pruning cannot repay its fixed two-phase
-#: plan cost (theta-seed + bound subtrees, ~a few extra exchanges), so
-#: ``exhaustive=False`` falls back to the single-scan exhaustive plan —
-#: results are identical either way; this only picks the cheaper plan.
-#: Lucene/tantivy make the same strategy call per-query from term stats.
-#:
-#: Calibrated from the measured crossover sweep (tools/wand_crossover.py,
-#: local[32], round 4, quiet-window best-of-3, after the fixed-cost cut
-#: — driver-literal seed θ + bounds, see score.wand_blocks_for_query):
-#: exhaustive vs forced-pruning wall seconds were 0.93/1.79 @1.5M
-#: candidate postings, 0.93/1.74 @6M, 1.28/1.61 @12M, and **1.81/1.58
-#: @24M — the pruning plan now WINS past ~17M postings** (round 3's
-#: plan never won below its ~40-50M extrapolation). The pruned wall is
-#: ~flat (fixed ~1.6s: two tiny header/seed driver jobs + the same
-#: stage count as exhaustive over ~1% of blocks) while exhaustive grows
-#: with decode volume, so the gate is set at the measured crossover.
+#: query terms' doc_freq), block pruning cannot repay its fixed cost (two
+#: tiny driver jobs), so ``exhaustive=False`` keeps the exhaustive plan —
+#: results are identical either way; this only picks the cheaper plan,
+#: as Lucene/tantivy do per query from term stats. The value is the
+#: crossover measured at local[32] in round 4.
 WAND_MIN_POSTINGS = 16_000_000
 
 #: Cap on how many times one term may repeat inside a sloppy phrase:
 #: the exact injective matcher (Hall's condition, see phrase_docs)
 #: builds 2^c - 1 column exprs per repeated term.
 MAX_PHRASE_TERM_REPEATS = 8
+
+
+def _phrase_key(terms: list[str], slop: int) -> str:
+    """Pseudo-term key of a quoted clause, e.g. ``"a b"~1``. Tokens are
+    runs of word characters, so no token can hold a quote or a space and
+    no key can collide with a term."""
+    return f'"{" ".join(terms)}"~{slop}'
+
+
+def _clauses(q: Query, stats_map: dict) -> tuple[list[str], list[str], list[str]]:
+    """The evaluated clause keys of ``q``: (scored, must, must_not).
+
+    Terms absent from the dictionary drop out (callers reject queries
+    with an absent MUST term first). Each distinct quoted clause joins
+    under its :func:`_phrase_key`, so phrases obey the same
+    should/must/must_not rules as terms — tantivy's BooleanQuery, where
+    a PhraseQuery is one more subquery."""
+    scored = [t for t in q.scored_terms if t in stats_map]
+    must = set(q.must)
+    mn = {t for t in q.must_not if t in stats_map}
+    for terms, slop, occur in q.phrases:
+        key = _phrase_key(terms, slop)
+        if occur == "must_not":
+            mn.add(key)
+            continue
+        if key not in scored:
+            scored.append(key)
+        if occur == "must":
+            must.add(key)
+    return scored, sorted(must), sorted(mn)
+
+
+def _clause_rows(
+    index, stats_map: dict, blocks: DataFrame | None, phrases: list
+) -> DataFrame:
+    """The one row source every evaluator reads: ``(term, doc_id,
+    partial)``.
+
+    Term rows are the decoded ``blocks`` scored with BM25 (B8). Each
+    distinct quoted ``(phrase, slop)`` clause adds one row per matching
+    doc, keyed by its :func:`_phrase_key`, with the :func:`phrase_docs`
+    score as partial — one positions pass per clause, however many
+    queries of a batch quote it. Rows are unique per (doc, key)."""
+    parts = []
+    if blocks is not None:
+        parts.append(_decode_postings(blocks).select(
+            "term", "doc_id",
+            bm25_score_col(
+                index, stats_map, F.col("term"), F.col("tf"), F.col("norm_id")
+            ).alias("partial"),
+        ))
+    seen: set[str] = set()
+    for terms, slop, _ in phrases:
+        key = _phrase_key(terms, slop)
+        if key in seen:
+            continue
+        seen.add(key)
+        parts.append(phrase_docs(index, terms, slop).select(
+            F.lit(key).alias("term"), "doc_id", F.col("score").alias("partial")
+        ))
+    return reduce(DataFrame.unionByName, parts)
 
 
 def matched_docs(
@@ -163,168 +220,84 @@ def matched_docs(
     k: int | None = None,
     wand_min_postings: int = WAND_MIN_POSTINGS,
 ) -> DataFrame:
-    """B2–B5: evaluate the boolean query -> DataFrame(doc_id, score).
+    """B2–B6: evaluate the boolean query -> DataFrame(doc_id, score).
 
-    ``exhaustive=False`` enables block-max WAND pruning (B10) for
-    should-only top-k queries — identical results, fewer decoded blocks
-    (requires ``k``); the engine still picks the exhaustive plan when the
-    candidate volume is under ``wand_min_postings`` (cost-based, see
-    above — pass 0 to force pruning). Everything else uses the
-    exhaustive path.
+    One groupBy(doc_id) over :func:`_clause_rows` applies should, must
+    and must_not to terms and quoted phrases alike, with literal
+    ``isin`` flags on the clause key.
+
+    ``exhaustive=False`` enables block-max pruning (B10) of the term
+    blocks — identical results, fewer decoded blocks (requires ``k``).
+    It calls :func:`sparktext.score.wand_blocks_for_batch` with a batch
+    of one, which prunes pure-should queries with positive boosts and
+    leaves every other shape exhaustive. The engine still picks the
+    exhaustive plan when the candidate volume is under
+    ``wand_min_postings`` (cost-based, see above — pass 0 to force
+    pruning).
     """
     stats_map = term_stats(index, query.scored_terms + query.must_not)
     spark = index.postings.sparkSession
     # A MUST term absent from the dictionary -> empty result, by definition.
     if any(t not in stats_map for t in query.must):
         return spark.createDataFrame([], "doc_id long, score double")
-    scored_present = [t for t in query.scored_terms if t in stats_map]
-    if not scored_present and not query.phrases:
+    scored, must, mn = _clauses(query, stats_map)
+    if not scored:
+        # no scoreable clause: only must_not clauses match nothing (tantivy)
         return spark.createDataFrame([], "doc_id long, score double")
-    mn_present = sorted({t for t in query.must_not if t in stats_map})
-    if not scored_present:
-        # phrase-only query (possibly with term-level must_not)
-        return _compose_phrase_clauses(index, query, None, stats_map, mn_present)
+    terms = [t for t in scored + mn if t in stats_map]
 
-    candidate_postings = sum(stats_map[t]["doc_freq"] for t in scored_present)
-    if (
-        not exhaustive
-        and k
-        and not query.phrases  # phrase scores aren't block-boundable
-        and candidate_postings >= wand_min_postings
-        # ub * boost bounds the boosted partial only for positive boosts
-        and all(b > 0 for b in query.boosts.values())
-        # tombstones: theta is seeded from raw postings, so deleted docs
-        # would inflate it above the true k-th best ALIVE score and prune
-        # blocks holding real results. Deletes are transient (purged at
-        # merge), so the exhaustive plan is the correct cost call here
-        # rather than threading an anti-join through both seed paths.
-        and index.deleted is None
-    ):
-        from sparktext.score import wand_blocks_for_query
+    blocks = None
+    if not exhaustive and k:
+        from sparktext.score import wand_blocks_for_batch
 
-        # SubqueryAlias marker: visible in the analyzed plan (asserted in
-        # tests), stripped by the optimizer — zero runtime cost.
-        blocks = wand_blocks_for_query(index, query, k, stats_map).alias("wand_pruned")
-    else:
+        blocks = wand_blocks_for_batch(
+            index, {"q": query}, k, stats_map, terms, wand_min_postings
+        )
+    if blocks is None and terms:
         # ONE decode scan covers scored AND must_not terms: exclusion
         # terms contribute no score (partial zeroed) but flag the doc for
         # removal in the same groupBy — no second postings scan.
-        blocks = postings_for_terms(index, scored_present + mn_present, stats_map)
-
-    scored = _decode_postings(blocks)
-    partial = bm25_score_col(
-        index, stats_map, F.col("term"), F.col("tf"), F.col("norm_id")
-    )
+        blocks = postings_for_terms(index, terms, stats_map)
+    partial = F.col("partial")
     if query.has_boosts:
-        from sparktext.score import _boost_mult_col
-
         partial = partial * _boost_mult_col(query.boosts, F.col("term"))
-    if mn_present:
-        partial = F.when(F.col("term").isin(mn_present), F.lit(0.0)).otherwise(partial)
-    scored = scored.withColumn("partial", partial)
+    if mn:
+        partial = F.when(F.col("term").isin(mn), F.lit(0.0)).otherwise(partial)
+    rows = _clause_rows(index, stats_map, blocks, query.phrases).withColumn(
+        "partial", partial
+    )
 
-    if len(scored_present) == 1 and not mn_present:
-        # ONE scored term and no exclusion terms: the decode emits at most
-        # one (doc, term) row per doc (blocks are per-(segment, term) with
-        # unique docs, and every doc lives in exactly one segment), so the
-        # groupBy(doc_id) is an identity aggregation — skip it and its
-        # whole shuffle (plan: decode -> project -> consumer; at 100 TB
-        # this removes the only Exchange of a term query). Any MUST
-        # clause is trivially satisfied: must ⊆ scored_terms and absent
-        # must terms already returned empty above.
-        grouped = scored.select("doc_id", F.col("partial").alias("score"))
+    if len(scored) == 1 and not mn:
+        # ONE scored clause and no exclusions: the rows hold at most one
+        # (doc, key) row per doc (term blocks are per-(segment, term) with
+        # unique docs and every doc lives in one segment; phrase rows are
+        # one per doc), so the groupBy(doc_id) is an identity aggregation
+        # — skip it and its whole shuffle (plan: decode -> project ->
+        # consumer; at 100 TB this removes the only Exchange of a term
+        # query). Any MUST clause is trivially satisfied: must ⊆ scored.
+        grouped = rows.select("doc_id", F.col("partial").alias("score"))
     else:
         aggs = [F.sum("partial").alias("score")]
-        if query.must:
-            must_set = set(query.must)
-            # count, not count_distinct: (doc, term) rows are UNIQUE in the
-            # decode (one posting per term per doc), so the distinct count
-            # equals the plain filtered count — and count_distinct plans a
-            # second aggregate phase (one more Exchange + job; measured 2x
-            # the wall of the plain-count plan on q_must at local[32]).
+        if must:
+            # count, not count_distinct: (doc, key) rows are UNIQUE, so the
+            # distinct count equals the plain filtered count — and
+            # count_distinct plans a second aggregate phase (one more
+            # Exchange + job; measured 2x the wall of the plain-count plan
+            # on q_must at local[32]).
             aggs.append(
-                F.count(
-                    F.when(F.col("term").isin(list(must_set)), F.lit(1))
-                ).alias("_must_hits")
+                F.count(F.when(F.col("term").isin(must), F.lit(1))).alias("_must_hits")
             )
-        if mn_present:
+        if mn:
             aggs.append(
-                F.max(F.when(F.col("term").isin(mn_present), 1).otherwise(0)).alias("_mn")
+                F.max(F.when(F.col("term").isin(mn), 1).otherwise(0)).alias("_mn")
             )
-        grouped = scored.groupBy("doc_id").agg(*aggs)
-        if query.must:
-            grouped = grouped.filter(F.col("_must_hits") == len(set(query.must))).drop("_must_hits")
-        if mn_present:
+        grouped = rows.groupBy("doc_id").agg(*aggs)
+        if must:
+            grouped = grouped.filter(F.col("_must_hits") == len(must)).drop("_must_hits")
+        if mn:
+            # also drops docs matched ONLY by must_not clauses
             grouped = grouped.filter(F.col("_mn") == 0).drop("_mn")
-    # Docs matched ONLY by must_not terms were dropped by the _mn filter;
-    # docs matched only by should/must terms keep their full score (their
-    # zeroed must_not partials never existed).
-    grouped = _alive(index, grouped)
-    if not query.phrases:
-        return grouped
-    return _compose_phrase_clauses(index, query, grouped, stats_map, mn_present)
-
-
-def _compose_phrase_clauses(
-    index, query: Query, grouped: DataFrame | None, stats_map: dict,
-    mn_present: list[str], phrase_cache: dict | None = None,
-) -> DataFrame:
-    """Fold quoted phrase clauses (B1 ``"a b"``/``"a b"~N`` syntax) into
-    the boolean result — tantivy BooleanQuery semantics with phrase
-    subqueries:
-
-    - should/must phrases contribute their PhraseWeight score (B6) to
-      the doc's sum; must phrases additionally filter (semi-join);
-      must_not phrases exclude (anti-join);
-    - term-level MUST clauses bind globally: phrase-matched docs that
-      fail them are excluded via a semi-join on the term-side result
-      (which already enforces its own must/mn constraints);
-    - term-level MUST_NOT binds globally too: the term-side aggregation
-      only excludes mn docs among ITS rows, so a separate anti-join on
-      the mn doc set covers phrase-only matches (the extra mn decode
-      scan is bucket-pruned and only runs for phrase+mn queries).
-    """
-    from functools import reduce
-
-    spark = index.postings.sparkSession
-    score_dfs = [grouped.select("doc_id", "score")] if grouped is not None else []
-    must_filters: list[DataFrame] = []
-    antis: list[DataFrame] = []
-    for terms, slop, occur in query.phrases:
-        if phrase_cache is not None:
-            ck = (tuple(terms), slop)
-            if ck not in phrase_cache:
-                # persist: in a batch, one clause can feed MANY query
-                # branches — the positions pivot must run once, not once
-                # per consumer (same pin rationale as the shared term
-                # pass in _search_many_phrases).
-                phrase_cache[ck] = phrase_docs(index, terms, slop).persist()
-            pdf = phrase_cache[ck]
-        else:
-            pdf = phrase_docs(index, terms, slop)
-        if occur == "must_not":
-            antis.append(pdf.select("doc_id"))
-        else:
-            score_dfs.append(pdf.select("doc_id", "score"))
-            if occur == "must":
-                must_filters.append(pdf.select("doc_id"))
-    if query.must and grouped is not None:
-        must_filters.append(grouped.select("doc_id"))
-    if not score_dfs:
-        # only must_not clauses scoreable-side: matches nothing (tantivy)
-        return spark.createDataFrame([], "doc_id long, score double")
-    if mn_present and (grouped is None or len(score_dfs) > 1):
-        mb = postings_for_terms(index, mn_present, stats_map)
-        antis.append(_decode_postings(mb).select("doc_id").distinct())
-    out = (
-        reduce(lambda a, b: a.unionByName(b), score_dfs)
-        .groupBy("doc_id").agg(F.sum("score").alias("score"))
-    )
-    for mf in must_filters:
-        out = out.join(mf, "doc_id", "left_semi")
-    for adf in antis:
-        out = out.join(adf, "doc_id", "left_anti")
-    return _alive(index, out)
+    return _alive(index, grouped)
 
 
 def _alive(index, df: DataFrame) -> DataFrame:
@@ -451,8 +424,6 @@ def phrase_docs(index, phrase_terms: list[str], slop: int = 0) -> DataFrame:
         inter = F.filter(F.element_at(F.col("pmap"), phrase_terms[0]), _anchor_ok)
     cand = per_doc.withColumn("phrase_tf", F.size(inter)).filter(F.col("phrase_tf") > 0)
 
-    from sparktext.score import B, K1, _decoded_norm_col
-
     sum_idf = float(sum(stats_map[t]["idf"] for t in phrase_terms))
     avgdl = float(index.stats.avg_len)
     norms = index.doc_meta.select("doc_id", "norm_id")
@@ -562,17 +533,18 @@ def _dict_expansion_union(index, dict_cond) -> DataFrame:
 
 #: Batch auto-pruning gate (round 6): with ``search_many(...,
 #: exhaustive=None)`` — the DEFAULT — batch block-max pruning turns on
-#: when (candidate postings of the union term set) x (live queries after
-#: dedup) reaches this volume. The batch pays pruning's fixed cost ONCE
-#: (two tiny driver jobs) while the saving scales with both the decode
-#: volume AND the per-query evaluation fan-out, so the batch crossover
-#: sits far below the single-query WAND_MIN_POSTINGS crossover.
-#: Calibrated from the round-6 sweep (bench_extra.py batch_crossover,
-#: local[32], 7-query zipf batch, best-of-3): exhaustive vs pruned wall
-#: = 1.56/1.60 s @2.6M volume, 2.03/1.63 @5.25M, 2.87/1.69 @10.5M,
-#: 2.94/1.65 @21M — the pruned wall is FLAT (fixed two driver jobs +
-#: ~1% of the decode) while exhaustive grows with volume; equality at
-#: ~2.6M, clear win from ~5M. Gate set just above the equality point.
+#: when the batch's match volume (Σ over live queries after dedup of
+#: each query's candidate postings) reaches this value. The batch pays
+#: pruning's fixed cost ONCE (two tiny driver jobs) while the saving
+#: scales with the decode volume and the per-query evaluation fan-out,
+#: so the batch crossover sits far below the single-query
+#: WAND_MIN_POSTINGS crossover. Calibrated from the round-6 sweep
+#: (bench_extra.py batch_crossover, local[32], 7-query zipf batch,
+#: best-of-3): exhaustive vs pruned wall = 1.56/1.60 s @2.6M volume,
+#: 2.03/1.63 @5.25M, 2.87/1.69 @10.5M, 2.94/1.65 @21M — the pruned wall
+#: is FLAT (fixed two driver jobs + ~1% of the decode) while exhaustive
+#: grows with volume; equality at ~2.6M, clear win from ~5M. Gate set
+#: just above the equality point.
 WAND_BATCH_MIN_VOLUME = 4_000_000
 
 #: search_many strategy auto-switch, by ESTIMATED row volume ratio:
@@ -594,29 +566,30 @@ def search_many(
     k: int = 10,
     round_decimals: int | None = None,
     strategy: str = "auto",
-    phase_walls: dict | None = None,
     exhaustive: bool | None = None,
     wand_min_postings: int = WAND_MIN_POSTINGS,
 ) -> DataFrame:
-    """Batch search: N queries -> ONE postings pass (B2–B5, B9 fused).
+    """Batch search: N queries -> ONE postings pass (B2–B6, B9 fused).
 
     Returns (query_id, doc_id, score) — the top-k of every query, ranked
-    per query by (score desc, doc_id asc). The decode scan covers the
-    UNION of all query terms once. This amortizes the per-job overhead
-    that dominates single-query latency and turns a query workload into
-    a throughput job — the q/s path at cluster scale.
+    per query by (score desc, doc_id asc). Every query reads the same
+    :func:`_clause_rows` source: the decode covers the UNION of all
+    query terms once, and each distinct quoted clause adds its
+    pseudo-term rows once. This amortizes the per-job overhead that
+    dominates single-query latency and turns a query workload into a
+    throughput job — the q/s path at cluster scale.
 
     Two physical strategies (``strategy``: "auto" | "broadcast" | "join"):
 
-    - **broadcast**: pivot decoded postings into one term->partial map
-      per doc, broadcast the query table, evaluate every query against
-      every doc-map row as codegen'd null-safe lookups. Evaluated rows =
+    - **broadcast**: pivot the rows into one key->partial map per doc,
+      broadcast the query table, evaluate every query against every
+      doc-map row as codegen'd null-safe lookups. Evaluated rows =
       |matched docs| x |queries| — unbeatable for small shared-vocabulary
       batches (3x measured on the 20x10 bench batch), quadratic-shaped
       for thousands of disjoint queries.
-    - **join**: broadcast-join decoded (doc, term, partial) rows against
-      the (query_id, term, flags) table on the term id — an EQUI-join,
-      so the intermediate is exactly the per-query match volume
+    - **join**: broadcast-join the (doc, key, partial) rows against the
+      (query_id, key, flags) table on the key id — an EQUI-join, so the
+      intermediate is exactly the per-query match volume
       Σ_q Σ_{t∈q} df(t), then one groupBy(doc, query) applies
       should/must/must_not semantics. The 100-TB shape: row count never
       exceeds real matches, no per-doc pivot map materializes.
@@ -641,10 +614,11 @@ def search_many(
     (:func:`sparktext.score.wand_blocks_for_batch`) — results identical
     either way (asserted in tests). ``exhaustive`` picks the plan:
 
-    - ``None`` (DEFAULT, round 6): cost-based — prune when candidate
-      postings x live queries reaches :data:`WAND_BATCH_MIN_VOLUME`
-      (the measured batch crossover; the fixed cost is two tiny driver
-      jobs paid once per batch), else decode everything;
+    - ``None`` (DEFAULT, round 6): cost-based — prune when the batch's
+      match volume (Σ per-query candidate postings) reaches
+      :data:`WAND_BATCH_MIN_VOLUME` (the measured batch crossover; the
+      fixed cost is two tiny driver jobs paid once per batch), else
+      decode everything;
     - ``True``: always decode the full union (the pre-round-6 default);
     - ``False``: prune subject to ``wand_min_postings`` candidate
       postings (pass 0 to force pruning — the bench/tests knob).
@@ -653,60 +627,34 @@ def search_many(
 
     spark = index.postings.sparkSession
     parsed = {qid: parse_query(qs) for qid, qs in queries.items()}
-    phrasey = {qid: q for qid, q in parsed.items() if q.phrases}
-    if phrasey:
-        # Mixed batch: phrase-carrying queries ride a dedicated branch
-        # (their TERM sides share one join-strategy pass, each distinct
-        # (phrase, slop) rides the positions index ONCE across the
-        # batch); the plain majority keeps the fully-shared plan below.
-        plain = {qid: qs for qid, qs in queries.items() if qid not in phrasey}
-        parts = [_search_many_phrases(index, phrasey, k, round_decimals)]
-        if plain:
-            parts.append(search_many(
-                index, plain, k, round_decimals, strategy, phase_walls,
-                exhaustive, wand_min_postings,
-            ))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-    # Boosted clauses (term^N): both batch plans share per-(doc, term)
-    # partials ACROSS queries, so boosts ride as per-(query, term)
-    # multipliers applied AFTER the shared stage — a parallel boost
-    # vector in the broadcast query table / a boost column in the join
-    # query table. Unboosted batches keep the leaner expression tree.
     all_terms = sorted({t for q in parsed.values() for t in q.scored_terms + q.must_not})
     stats_map = term_stats(index, all_terms)
 
-    # Collect the union of needed terms. Queries whose MUST terms are
-    # missing from the dictionary match nothing and emit no branch.
+    # Queries whose MUST terms are missing from the dictionary, or with
+    # no scoreable clause, match nothing and emit no branch.
     live: dict[str, Query] = {}
-    need_terms: set[str] = set()
+    clauses: dict[str, tuple] = {}
     for qid, q in parsed.items():
         if any(t not in stats_map for t in q.must):
             continue
-        scored_present = [t for t in q.scored_terms if t in stats_map]
-        if not scored_present:
-            continue
-        live[qid] = q
-        need_terms.update(scored_present)
-        need_terms.update(t for t in q.must_not if t in stats_map)
+        cl = _clauses(q, stats_map)
+        if cl[0]:
+            live[qid], clauses[qid] = q, cl
 
     if not live:
         return spark.createDataFrame([], "query_id string, doc_id long, score double")
 
-    # Batch DEDUP: queries with identical evaluated signatures (present
-    # scored terms + must/must_not sets + effective boosts) produce
-    # identical top-k — evaluate ONE representative per signature and
-    # fan the rows back out through a tiny broadcast mapping at the end.
-    # Real batch workloads repeat queries constantly; evaluated-row
-    # volume scales with DISTINCT signatures, not submitted strings.
+    # Batch DEDUP: queries with identical evaluated signatures (clause
+    # keys + effective boosts) produce identical top-k — evaluate ONE
+    # representative per signature and fan the rows back out through a
+    # tiny broadcast mapping at the end. Real batch workloads repeat
+    # queries constantly; evaluated-row volume scales with DISTINCT
+    # signatures, not submitted strings.
     sig_groups: dict[tuple, list[str]] = {}
     for qid, q in live.items():
+        sc, mu, mn = clauses[qid]
         key = (
-            tuple(sorted(t for t in q.scored_terms if t in stats_map)),
-            tuple(sorted(set(q.must))),
-            tuple(sorted(t for t in set(q.must_not) if t in stats_map)),
+            tuple(sorted(sc)), tuple(mu), tuple(mn),
             tuple(sorted(
                 (t, b) for t, b in q.boosts.items()
                 if t in stats_map and b != 1.0
@@ -719,108 +667,120 @@ def search_many(
             (qids[0], qid) for qids in sig_groups.values() for qid in qids
         ]
         live = {qids[0]: live[qids[0]] for qids in sig_groups.values()}
-
-    def _expand_dups(ranked: DataFrame) -> DataFrame:
-        if dup_map is None:
-            return ranked
-        mdf = F.broadcast(spark.createDataFrame(dup_map, "_rep string, _qid string"))
-        return (
-            ranked.join(mdf, ranked["query_id"] == mdf["_rep"])
-            .select(F.col("_qid").alias("query_id"), "doc_id", "score")
-        )
+    keyed = [clauses[qid][0] + clauses[qid][2] for qid in live]  # scored + must_not
+    terms = sorted({t for ks in keyed for t in ks if t in stats_map})
 
     # Batch block-max pruning (B10 x batch): both strategies consume the
-    # same decode source, so the pruned survivor union (thresholds folded
-    # across queries driver-side — see score.wand_blocks_for_batch) drops
-    # in transparently; None means "prune nothing" and the full union
-    # decode proceeds as before. ``exhaustive=None`` is the cost-based
-    # default: the volume gate below decides (see WAND_BATCH_MIN_VOLUME).
-    blocks_src = None
+    # same row source, so the pruned survivor union (thresholds folded
+    # across queries driver-side — see score.wand_blocks_for_batch)
+    # drops in transparently; None means "prune nothing" and the full
+    # union decode proceeds. ``exhaustive=None`` is the cost-based
+    # default: the match-volume gate decides (see WAND_BATCH_MIN_VOLUME).
+    blocks = None
     if k and exhaustive is not True:
         gate = wand_min_postings
         attempt = exhaustive is False
-        if exhaustive is None:
-            cand = sum(
-                stats_map[t]["doc_freq"] for t in need_terms if t in stats_map
-            )
-            if cand * len(live) >= WAND_BATCH_MIN_VOLUME:
-                attempt, gate = True, 0
+        if exhaustive is None and _match_volume(stats_map, live) >= WAND_BATCH_MIN_VOLUME:
+            attempt, gate = True, 0
         if attempt:
             from sparktext.score import wand_blocks_for_batch
 
-            blocks_src = wand_blocks_for_batch(
-                index, live, k, stats_map, sorted(need_terms), gate
-            )
+            blocks = wand_blocks_for_batch(index, live, k, stats_map, terms, gate)
+    if blocks is None and terms:
+        blocks = postings_for_terms(index, terms, stats_map)
 
-    if strategy == "auto":
-        strategy = _pick_batch_strategy(
-            index.stats.num_docs, stats_map, live, need_terms
-        )
-    if strategy == "join":
-        return _expand_dups(_search_many_join(
-            index, live, stats_map, sorted(need_terms), k, round_decimals,
-            blocks=blocks_src,
-        ))
-
-    # ONE decode of the union term set -> one row per doc holding a
-    # term->partial-score MAP, then a BROADCAST join against the tiny
-    # query table. Per-query term lists are UNROLLED into fixed-width
-    # null-padded columns (t0..tN / m0../ n0.., widths = the batch's max
-    # list lengths, typically <= 4): match/must/must_not/score become
-    # plain null-safe map lookups, which whole-stage codegen compiles —
-    # the previous exists()/forall()/aggregate() higher-order lambdas are
-    # INTERPRETED per row, and the fan-out evaluates doc_count x
-    # query_count rows, so interpretation dominated batch wall time.
-    # The expression tree stays CONSTANT-SIZE in the number of queries
-    # (no per-query janino compile cost); per-query top-k is cut by
-    # WindowGroupLimit's partial heap before the only qid exchange.
-    terms = sorted(need_terms)
-    # Union terms get dense driver-side int ids: the 40M-row groupBy then
+    # Clause keys get dense driver-side int ids: the groupBy then
     # shuffles (doc, int, double) instead of (doc, string, double) and
-    # the per-(doc, query) lookups hash ints, not strings.
-    term_id = {t: i for i, t in enumerate(terms)}
-    decoded = _decode_postings(
-        blocks_src if blocks_src is not None
-        else postings_for_terms(index, terms, stats_map)
-    )
+    # the per-(doc, query) lookups hash ints, not strings. Terms come
+    # first, then the phrase keys.
+    keys = terms + sorted({t for ks in keyed for t in ks if t not in stats_map})
+    term_id = {t: i for i, t in enumerate(keys)}
     tid_pairs = []
     for t, i in term_id.items():
         tid_pairs.extend([F.lit(t), F.lit(i)])
-    scored = decoded.select(
+    rows = _clause_rows(
+        index, stats_map, blocks, [p for q in live.values() for p in q.phrases]
+    ).select(
         "doc_id",
         F.element_at(F.create_map(*tid_pairs), F.col("term")).alias("tid"),
-        bm25_score_col(
-            index, stats_map, F.col("term"), F.col("tf"), F.col("norm_id")
-        ).alias("partial"),
+        "partial",
     )
-    doc_maps = scored.groupBy("doc_id").agg(
+
+    if strategy == "auto":
+        strategy = _pick_batch_strategy(
+            index.stats.num_docs, stats_map, live, set(terms)
+        )
+    evaluate = _eval_join if strategy == "join" else _eval_broadcast
+    grouped = _alive(index, evaluate(spark, rows, live, clauses, term_id))
+    if round_decimals is not None:
+        grouped = grouped.withColumn("score", F.round(F.col("score"), round_decimals))
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+    ranked = (
+        grouped.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= k)
+        .drop("_rn")
+    )
+    if dup_map is None:
+        return ranked
+    mdf = F.broadcast(spark.createDataFrame(dup_map, "_rep string, _qid string"))
+    return (
+        ranked.join(mdf, ranked["query_id"] == mdf["_rep"])
+        .select(F.col("_qid").alias("query_id"), "doc_id", "score")
+    )
+
+
+def _match_volume(stats_map: dict, live: dict) -> int:
+    """Σ over queries of each query's candidate postings (the doc_freq
+    of its distinct scored and must_not terms) — the join strategy's
+    row count and the batch pruning gate's volume."""
+    return sum(
+        stats_map[t]["doc_freq"]
+        for q in live.values()
+        for t in set(q.scored_terms + q.must_not)
+        if t in stats_map
+    )
+
+
+def _pick_batch_strategy(
+    num_docs: int, stats_map: dict, live: dict, need_terms: set[str]
+) -> str:
+    """Cost-based broadcast-vs-join call from broadcast-dictionary term
+    stats alone (no extra jobs) — see SEARCH_MANY_JOIN_RATIO."""
+    union_df = sum(stats_map[t]["doc_freq"] for t in need_terms if t in stats_map)
+    bcast_rows = min(num_docs, union_df) * len(live)
+    join_rows = _match_volume(stats_map, live)
+    return "join" if bcast_rows > SEARCH_MANY_JOIN_RATIO * max(join_rows, 1) else "broadcast"
+
+
+def _eval_broadcast(spark, rows: DataFrame, live: dict, clauses: dict, term_id: dict) -> DataFrame:
+    """The broadcast strategy (see :func:`search_many`): (doc_id,
+    query_id, score) with the boolean semantics applied.
+
+    ONE row per doc holding a key->partial MAP, then a BROADCAST join
+    against the tiny query table. Per-query key lists are UNROLLED into
+    fixed-width null-padded columns (t0..tN / m0../ n0.., widths = the
+    batch's max list lengths, typically <= 4): match/must/must_not/score
+    become plain null-safe map lookups, which whole-stage codegen
+    compiles — exists()/forall()/aggregate() higher-order lambdas are
+    INTERPRETED per row, and the fan-out evaluates doc_count x
+    query_count rows. The expression tree stays CONSTANT-SIZE in the
+    number of queries (no per-query janino compile cost); per-query
+    top-k is cut by WindowGroupLimit's partial heap before the only qid
+    exchange.
+    """
+    doc_maps = rows.groupBy("doc_id").agg(
         F.map_from_entries(F.collect_list(F.struct("tid", "partial"))).alias("pm")
     )
-    if phase_walls is not None:
-        # DIAGNOSTIC ONLY (scaling analysis): time the cumulative
-        # sub-stages with extra actions — each count re-runs its
-        # upstream, so walls are cumulative prefixes of the plan:
-        # decode+score projection, then + the pivot groupBy. The caller
-        # subtracts to get per-stage walls; never pass this in
-        # production (it runs the prefix stages twice).
-        import time as _time
-
-        _t = _time.time()
-        scored.count()
-        phase_walls["w_decode_score"] = round(_time.time() - _t, 3)
-        _t = _time.time()
-        doc_maps.count()
-        phase_walls["w_plus_pivot"] = round(_time.time() - _t, 3)
     boosted = any(q.has_boosts for q in live.values())
-    lists = {
-        qid: (
-            [term_id[t] for t in q.scored_terms if t in stats_map],
-            [float(q.boosts.get(t, 1.0)) for t in q.scored_terms if t in stats_map],
-            sorted(term_id[t] for t in set(q.must)),
-            sorted(term_id[t] for t in set(q.must_not) if t in stats_map),
+    lists = {}
+    for qid, q in live.items():
+        sc, mu, mn = clauses[qid]
+        lists[qid] = (
+            [term_id[t] for t in sc],
+            [float(q.boosts.get(t, 1.0)) for t in sc],
+            sorted(term_id[t] for t in mu),
+            sorted(term_id[t] for t in mn),
         )
-        for qid, q in live.items()
-    }
     w_t = max(len(v[0]) for v in lists.values())
     w_m = max((len(v[2]) for v in lists.values()), default=0)
     w_n = max((len(v[3]) for v in lists.values()), default=0)
@@ -865,105 +825,27 @@ def search_many(
         cond = cond & (F.col(f"m{j}").isNull() | _lk(f"m{j}").isNotNull())
     for l in range(w_n):
         cond = cond & (F.col(f"n{l}").isNull() | _lk(f"n{l}").isNull())
-    grouped = joined.filter(cond).select(
-        "doc_id", "query_id", score.alias("score")
-    )
-
-    grouped = _alive(index, grouped)
-    if round_decimals is not None:
-        grouped = grouped.withColumn("score", F.round(F.col("score"), round_decimals))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return _expand_dups(
-        grouped.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    return joined.filter(cond).select("doc_id", "query_id", score.alias("score"))
 
 
-def _pick_batch_strategy(
-    num_docs: int, stats_map: dict, live: dict, need_terms: set[str]
-) -> str:
-    """Cost-based broadcast-vs-join call from broadcast-dictionary term
-    stats alone (no extra jobs) — see SEARCH_MANY_JOIN_RATIO."""
-    union_df = sum(stats_map[t]["doc_freq"] for t in need_terms if t in stats_map)
-    bcast_rows = min(num_docs, union_df) * len(live)
-    join_rows = sum(
-        stats_map[t]["doc_freq"]
-        for q in live.values()
-        for t in set(q.scored_terms + q.must_not)
-        if t in stats_map
-    )
-    return "join" if bcast_rows > SEARCH_MANY_JOIN_RATIO * max(join_rows, 1) else "broadcast"
+def _eval_join(spark, rows: DataFrame, live: dict, clauses: dict, term_id: dict) -> DataFrame:
+    """The equi-join strategy (see :func:`search_many`): (doc_id,
+    query_id, score) with the boolean semantics applied.
 
-
-def _search_many_join(
-    index,
-    live: dict[str, Query],
-    stats_map: dict,
-    terms: list[str],
-    k: int,
-    round_decimals: int | None,
-    blocks: DataFrame | None = None,
-) -> DataFrame:
-    """The equi-join batch strategy (see :func:`search_many`).
-
-    Intermediate row count == Σ over (query, term, matching doc) — the
-    true match volume — because decoded postings join the broadcast
-    (query_id, term_id, occur-flags) table on the term id. One
-    groupBy(doc, query) then applies the full boolean semantics:
-    score = Σ partials of scored terms, must satisfied iff the distinct
-    matched must-term count equals the query's must count, must_not
-    excluded via a flag max. No per-doc pivot map, no |docs| x |queries|
-    fan-out — the strategy for thousands of disjoint queries.
+    Intermediate row count == Σ over (query, key, matching doc) — the
+    true match volume — because the rows join the broadcast (query_id,
+    tid, occur-flags) table on the key id. One groupBy(doc, query) then
+    applies the full boolean semantics: score = Σ partials of scored
+    keys, must satisfied iff the matched must-key count equals the
+    query's must count, must_not excluded via a flag max. No per-doc
+    pivot map, no |docs| x |queries| fan-out — the strategy for
+    thousands of disjoint queries.
     """
-    from pyspark.sql import Window
-
-    grouped = _alive(
-        index, _search_many_join_grouped(index, live, stats_map, terms, blocks)
-    )
-    if round_decimals is not None:
-        grouped = grouped.withColumn("score", F.round(F.col("score"), round_decimals))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        grouped.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
-
-
-def _search_many_join_grouped(
-    index, live: dict[str, Query], stats_map: dict, terms: list[str],
-    blocks: DataFrame | None = None,
-) -> DataFrame:
-    """Join-strategy core: (doc_id, query_id, score) rows with full
-    boolean semantics applied, BEFORE tombstone filtering, rounding and
-    per-query top-k — reused by the phrase batch branch, which must add
-    phrase score contributions ahead of the cut. ``blocks`` optionally
-    substitutes a pruned survivor-block source for the full union scan."""
-    spark = index.postings.sparkSession
-    term_id = {t: i for i, t in enumerate(terms)}
-    decoded = _decode_postings(
-        blocks if blocks is not None
-        else postings_for_terms(index, terms, stats_map)
-    )
-    tid_pairs = []
-    for t, i in term_id.items():
-        tid_pairs.extend([F.lit(t), F.lit(i)])
-    scored = decoded.select(
-        "doc_id",
-        F.element_at(F.create_map(*tid_pairs), F.col("term")).alias("tid"),
-        bm25_score_col(
-            index, stats_map, F.col("term"), F.col("tf"), F.col("norm_id")
-        ).alias("partial"),
-    )
-
     id_term = {i: t for t, i in term_id.items()}
     qrows = []
     mc_rows = []
     for qid, q in live.items():
-        sc = {term_id[t] for t in q.scored_terms if t in stats_map}
-        mu = {term_id[t] for t in set(q.must)}  # absent-must queries already dropped
-        mn = {term_id[t] for t in set(q.must_not) if t in stats_map}
+        sc, mu, mn = ({term_id[t] for t in ks} for ks in clauses[qid])
         mc_rows.append((qid, len(mu)))
         for tid in sorted(sc | mu | mn):
             qrows.append((
@@ -976,16 +858,15 @@ def _search_many_join_grouped(
         "is_mn boolean, boost double",
     ))
     mc = F.broadcast(spark.createDataFrame(mc_rows, "query_id string, n_must int"))
-
-    grouped = (
-        scored.join(qdf, "tid")
+    return (
+        rows.join(qdf, "tid")
         .groupBy("doc_id", "query_id")
         .agg(
             F.sum(
                 F.when(F.col("is_scored"), F.col("partial") * F.col("boost"))
             ).alias("score"),
             # count, not count_distinct: (doc, tid, query) rows are unique
-            # (decoded (doc, tid) unique x qdf (query, tid) unique), and
+            # (rows (doc, tid) unique x qdf (query, tid) unique), and
             # count_distinct would add a second aggregate phase/Exchange.
             F.count(F.when(F.col("is_must"), F.lit(1))).alias("_mh"),
             F.max(F.when(F.col("is_mn"), 1).otherwise(0)).alias("_mn"),
@@ -996,95 +877,4 @@ def _search_many_join_grouped(
             (F.col("_any") == 1) & (F.col("_mh") == F.col("n_must")) & (F.col("_mn") == 0)
         )
         .select("doc_id", "query_id", "score")
-    )
-    return grouped
-
-
-def _search_many_phrases(
-    index,
-    phrasey: dict[str, Query],
-    k: int,
-    round_decimals: int | None,
-) -> DataFrame:
-    """Batch branch for phrase-carrying queries (B1 ``"a b"``/``"a b"~N``
-    inside :func:`search_many` batches).
-
-    Sharing structure — phrases are rare per batch, so the design
-    shares the EXPENSIVE stages and accepts per-query driver-side plan
-    branches for the composition:
-
-    - the term sides of every phrase-carrying query are ONE
-      join-strategy pass over the shared decode
-      (:func:`_search_many_join_grouped`), not a scan per query;
-    - each distinct ``(phrase terms, slop)`` clause rides the positions
-      index ONCE per batch (clause-level dedup via a plan cache), no
-      matter how many queries quote it;
-    - per query, the proven single-query composer
-      (:func:`_compose_phrase_clauses`) folds phrase scores/filters into
-      its term-side rows — identical semantics to ``matched_docs``
-      (asserted in tests) — and one shared window applies the top-k cut
-      AFTER phrase contributions (a phrase can promote a doc into the
-      top k, so composing post-cut would be wrong).
-    """
-    from pyspark.sql import Window
-
-    spark = index.postings.sparkSession
-    all_terms = sorted({
-        t for q in phrasey.values() for t in q.scored_terms + q.must_not
-    })
-    stats_map = term_stats(index, all_terms)
-    live: dict[str, Query] = {}
-    need_terms: set[str] = set()
-    for qid, q in phrasey.items():
-        if any(t not in stats_map for t in q.must):
-            continue  # absent MUST term -> matches nothing, by definition
-        live[qid] = q
-        need_terms.update(t for t in q.scored_terms if t in stats_map)
-        need_terms.update(t for t in q.must_not if t in stats_map)
-    if not live:
-        return spark.createDataFrame([], "query_id string, doc_id long, score double")
-
-    termful = {
-        qid: q for qid, q in live.items()
-        if any(t in stats_map for t in q.scored_terms)
-    }
-    grouped = None
-    if termful and need_terms:
-        # PERSIST the shared term-side pass (round 6, closes the r5
-        # verdict's "implicit exchange reuse" finding): every per-query
-        # branch filters this same frame, and without the pin Catalyst
-        # re-plans (and the runtime re-EXECUTES) the decode+join+groupBy
-        # subtree once per query — measured 121 Exchange / 60 MapInPandas
-        # nodes and 16 s for a 12-query batch on a 200-doc corpus;
-        # persisted, the subtree runs once and branches scan the cache.
-        # The frame is (query_id, doc_id, score) — bounded by the batch's
-        # true match volume. Released by Spark's ContextCleaner when the
-        # returned plan is dropped (no explicit handle exists to thread a
-        # release through a lazily-consumed return).
-        grouped = _search_many_join_grouped(
-            index, termful, stats_map, sorted(need_terms)
-        ).persist()
-    phrase_cache: dict = {}
-    outs = []
-    for qid, q in live.items():
-        g_q = None
-        if qid in termful:
-            g_q = grouped.filter(F.col("query_id") == qid).select("doc_id", "score")
-        mn_present = sorted({t for t in q.must_not if t in stats_map})
-        res = _compose_phrase_clauses(
-            index, q, g_q, stats_map, mn_present, phrase_cache=phrase_cache
-        )
-        outs.append(res.select(
-            F.lit(qid).alias("query_id"), "doc_id", "score"
-        ))
-    out = outs[0]
-    for p in outs[1:]:
-        out = out.unionByName(p)
-    if round_decimals is not None:
-        out = out.withColumn("score", F.round(F.col("score"), round_decimals))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        out.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
     )

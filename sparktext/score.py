@@ -10,23 +10,22 @@ and ``avgdl`` the exact corpus mean token count. The score is a pure
 column expression over decoded postings — whole-stage-codegen'd, no UDF.
 
 Block-max WAND here is a *data-parallel two-phase* reformulation of
-tantivy's document-at-a-time algorithm (no Catalyst equivalent, §4.3):
+tantivy's document-at-a-time algorithm (no Catalyst equivalent, §4.3),
+in ONE pruner, :func:`wand_blocks_for_batch`; a single query is a batch
+of one:
 
 - every block row carries (max_tf, min_norm_id); its score upper bound is
   the BM25 formula evaluated at tf=max_tf, dl=decode(min_norm_id) — BM25
   is increasing in tf and decreasing in dl, so this bounds any doc in it;
-- phase 1 decodes only the few highest-bound blocks per term and scores
-  them exactly; the k-th best *partial* score is a valid lower bound θ of
-  the final k-th best score — this is the ONLY driver action in the
-  pruning path (one job, no persist);
+- phase 1 fetches only the few highest-bound blocks per term, decodes
+  them on the driver and scores them exactly; per query, the k-th best
+  *partial* score is a valid lower bound θ of its final k-th best score;
 - phase 2 keeps block B of term t in segment s iff
-  ub(B) + Σ_{t'≠t} max_ub(t', s) >= θ. The "other terms" bound is
-  PER-SEGMENT (a doc's postings live in exactly one segment, so only
-  same-segment blocks of other terms can contribute to its score) — far
-  tighter than a global per-term bound when impact is clustered by doc
-  range, which is exactly the layout block-max WAND exploits. The bound
-  table is computed lazily from block headers (a groupBy 128x smaller
-  than postings) and broadcast-joined back — no second collect.
+  ub(B) + Σ_{t'≠t} max_ub(t', s) >= θ for some query. The "other terms"
+  bound is PER-SEGMENT (a doc's postings live in exactly one segment, so
+  only same-segment blocks of other terms can contribute to its score)
+  — far tighter than a global per-term bound when impact is clustered by
+  doc range, which is exactly the layout block-max WAND exploits.
 
 Correctness: if B is pruned, every doc d in B has true score
 <= ub(B) + Σ_{t'≠t} max_ub(t', seg(d)) < θ <= k-th best; so no true
@@ -122,14 +121,11 @@ def block_ub_col(index, stats_map) -> Column:
     return idf_c * tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / F.lit(avgdl)))
 
 
-#: Driver-side bound table gate: the per-(segment, term) max-ub table is
-#: collected and inlined as literal map lookups when it has at most this
-#: many rows (segments x query terms — a query-sized lookup, same class
-#: as the term_stats collect). Beyond it, the distributed pivot +
-#: broadcast-join plan takes over. The literal path removes TWO AQE
-#: stage materializations (the seg-bounds groupBy exchange and its
-#: broadcast) from WAND's fixed cost — the round-3 verdict's reason the
-#: pruning plan never repaid itself below ~24M postings.
+#: Literal threshold gate: the per-(term, segment) survivor thresholds
+#: are inlined as literal map lookups when there are at most this many
+#: (segments x query terms — a query-sized lookup, same class as the
+#: term_stats collect), which keeps the survivor subtree free of extra
+#: exchanges. Beyond it, a broadcast join carries them.
 WAND_DRIVER_BOUNDS_MAX = 4096
 
 
@@ -171,8 +167,8 @@ def _theta_from_decoded(index, stats_map, boosts, dec, k: int) -> float:
     """θ from an already-decoded seed posting frame (columns term,
     doc_id, tf, norm_id): the k-th best per-doc partial sum, scored with
     the same BM25 formula in numpy. 0 when fewer than k seed docs —
-    prune nothing. The batch path calls this once per query over ONE
-    shared decode (sliced to the query's terms by the caller)."""
+    prune nothing. Called once per query over ONE shared decode (sliced
+    to the query's terms by the caller)."""
     import numpy as np
     import pandas as pd
 
@@ -199,239 +195,6 @@ def _theta_from_decoded(index, stats_map, boosts, dec, k: int) -> float:
     return theta - max(abs(theta) * 1e-9, 1e-12)
 
 
-def _theta_local(index, stats_map, boosts, rows, k: int) -> float:
-    """θ computed on the DRIVER from collected seed-block payloads:
-    decode with the local codec then :func:`_theta_from_decoded`.
-    Bounded work: the caller collects at most seeds_per_term x |terms|
-    block rows."""
-    if not rows:
-        return 0.0
-    import pandas as pd
-
-    from sparktext import codec
-
-    dec = codec.decode_blocks_pdf(pd.DataFrame([r.asDict() for r in rows]))
-    return _theta_from_decoded(index, stats_map, boosts, dec, k)
-
-
-def wand_candidate_blocks(index, terms: list[str], k: int, stats_map=None) -> DataFrame:
-    """Should-only entry point (kept for the bench counters and older
-    call sites) — see :func:`wand_blocks_for_query` for the general
-    must/must_not/boost-aware pruning."""
-    from sparktext.query import Query  # local import: cycle
-
-    return wand_blocks_for_query(index, Query(should=list(terms)), k, stats_map)
-
-
-def wand_blocks_for_query(index, query, k: int, stats_map=None) -> DataFrame:
-    """Block-max pruning for a full boolean query; returns the block rows
-    the scorer must decode, LAZILY.
-
-    Plan shape: ONE header-cache job collects the per-(segment, term)
-    bound table AND the seed block keys together (bounded by
-    :data:`WAND_DRIVER_BOUNDS_MAX` rows — query-sized, the same class of
-    driver action as the term_stats lookup); for pure-should queries a
-    second tiny job fetches the few seed payload blocks so θ becomes a
-    LITERAL, and the main query job then has the exhaustive plan's exact
-    stage count over ~1% of the blocks. Pieces:
-
-    - **θ seed**: with MUST clauses, the seed set is ALL blocks of the
-      must (+ must_not) terms — they must be decoded anyway, and the
-      k-th best boosted must-partial sum over docs passing the boolean
-      filter is a valid lower bound of the final k-th best score (should
-      partials only ADD); θ rides as a 1-row DataFrame broadcast into
-      the survivor filter. Without must, the seeds are the few
-      highest-ub blocks per scored term (classic block-max seeding,
-      here the per-(term, segment) top blocks from the bounds collect),
-      decoded ON THE DRIVER with the local codec → θ literal; must_not
-      seeds are decoded distributed so excluded docs can't inflate θ.
-    - **bounds**: per-(segment, term) max block ubs (boost-scaled),
-      inlined as literal maps (zero exchanges); geometries past
-      WAND_DRIVER_BOUNDS_MAX fall back to the distributed pivot +
-      broadcast plan with a distributed θ.
-    - **pruning applies only to should-only terms**: keep block B of
-      term t in segment s iff ub(B) + Σ_{t'≠t, scored} max_ub(t', s) >=
-      θ. Must/must_not blocks always pass (the boolean filter needs
-      them). Correctness: a pruned block's docs have true score below θ
-      <= k-th best, and every true top-k doc keeps ALL its blocks (its
-      real score >= θ certifies every per-term bound test), so results
-      are identical to exhaustive — asserted incl. must/boost variants
-      in tests/test_wand.py.
-
-    Boosts must be POSITIVE (the caller gates): ub * boost bounds the
-    boosted partial only for boost > 0.
-    """
-    from sparktext import codec
-    from sparktext.query import postings_for_terms  # local import: cycle
-
-    if stats_map is None:
-        stats_map = term_stats(index, query.scored_terms + query.must_not)
-    scored = [t for t in query.scored_terms if t in stats_map]
-    must = sorted({t for t in query.must if t in stats_map})
-    mn = sorted({t for t in query.must_not if t in stats_map})
-    should_only = [t for t in scored if t not in set(must)]
-    boosts = {t: float(query.boosts.get(t, 1.0)) for t in scored}
-
-    all_terms = sorted(set(scored) | set(mn))
-    blocks = postings_for_terms(index, all_terms, stats_map)
-    if not should_only:
-        return blocks  # pure-must query: nothing prunable
-
-    buckets = sorted({stats_map[t]["term_bucket"] for t in scored})
-    hdr = index.block_headers().filter(
-        F.col("term_bucket").isin(buckets) & F.col("term").isin(scored)
-    ).withColumn(
-        "_ub", block_ub_col(index, stats_map) * _boost_mult_col(boosts, F.col("term"))
-    )
-
-    # --- bounds (tiny header-cache job) ------------------------------
-    bound_rows = (
-        hdr.groupBy("segment_id", "term").agg(F.max("_ub").alias("m"))
-        .limit(WAND_DRIVER_BOUNDS_MAX + 1)
-        .collect()
-    )
-    driver_mode = len(bound_rows) <= WAND_DRIVER_BOUNDS_MAX
-
-    # --- θ seed ------------------------------------------------------
-    anchor_terms = sorted(set(must) | set(mn))
-    theta_df = None
-    theta_lit: float | None = None
-    if not (must or mn) and driver_mode:
-        # Pure-should query, bounded geometry: collect the GLOBAL top
-        # seed block keys per term (a window over the header cache —
-        # deliberately global, not per-segment: the best seed blocks of
-        # different terms tend to cover the SAME high-impact doc ranges,
-        # and θ quality comes from that overlap), fetch those few payload
-        # rows, decode with the local codec, and inline θ as a LITERAL.
-        # The pruned plan then has the exhaustive plan's exact stage
-        # count — the θ subtree's three AQE materializations (decode
-        # exchange, doc groupBy, top-k limit) vanish, which was the
-        # round-3 fixed cost that kept pruning from ever repaying itself
-        # locally.
-        seed_payload = (
-            blocks.filter(_seed_key_cond(hdr, k))
-            .select("segment_id", "term", "count", "first_doc",
-                    "doc_bits", "doc_bytes", "tf_bytes", "norm_bytes")
-            .collect()
-        )
-        theta_lit = _theta_local(index, stats_map, boosts, seed_payload, k)
-    else:
-        # must/must_not anchors are unbounded postings (and the >4096-row
-        # fallback keeps everything distributed), so θ stays a 1-row
-        # DataFrame broadcast into the survivor filter.
-        if must:
-            seed_blocks = blocks.filter(F.col("term").isin(anchor_terms))
-        else:
-            seed_cond = _seed_key_cond(hdr, k)
-            if mn:
-                seed_cond = seed_cond | F.col("term").isin(mn)
-            seed_blocks = blocks.filter(seed_cond)
-        seed_partial = F.when(
-            F.col("term").isin(mn) & ~F.col("term").isin(scored), F.lit(0.0)
-        ).otherwise(
-            bm25_score_col(index, stats_map, F.col("term"), F.col("tf"), F.col("norm_id"))
-            * _boost_mult_col(boosts, F.col("term"))
-        )
-        seed_aggs = [F.sum("partial").alias("s")]
-        if must:
-            # count == count_distinct here: (doc, term) decode rows are
-            # unique, and count_distinct costs an extra aggregate phase.
-            seed_aggs.append(
-                F.count(
-                    F.when(F.col("term").isin(must), F.lit(1))
-                ).alias("_mh")
-            )
-        if mn:
-            seed_aggs.append(
-                F.max(F.when(F.col("term").isin(mn), 1).otherwise(0)).alias("_mn")
-            )
-        seed_docs = (
-            seed_blocks.select("segment_id", "term", "count", "first_doc",
-                               "doc_bits", "doc_bytes", "tf_bytes", "norm_bytes")
-            .mapInPandas(
-                lambda it: (codec.decode_blocks_pdf(pdf) for pdf in it),
-                schema="segment_id int, term string, doc_id long, tf long, norm_id long",
-            )
-            .withColumn("partial", seed_partial)
-            .groupBy("doc_id").agg(*seed_aggs)
-        )
-        if must:
-            seed_docs = seed_docs.filter(F.col("_mh") == len(must))
-        if mn:
-            seed_docs = seed_docs.filter(F.col("_mn") == 0)
-        theta_df = (
-            seed_docs.orderBy(F.desc("s")).limit(k)
-            .agg(
-                F.when(F.count("*") >= k, F.min("s")).otherwise(F.lit(0.0)).alias("_theta")
-            )
-        )
-
-    # --- survivor filter ---------------------------------------------
-    prunable = blocks.filter(F.col("term").isin(should_only)).withColumn(
-        "_ub", block_ub_col(index, stats_map) * _boost_mult_col(boosts, F.col("term"))
-    )
-    if driver_mode:
-        # literal maps: other(t, s) = total(s) - max_ub(t, s); pure
-        # codegen lookups, zero extra exchanges in the survivor subtree.
-        totals: dict[int, float] = {}
-        own: dict[str, float] = {}
-        for r in bound_rows:
-            totals[r["segment_id"]] = totals.get(r["segment_id"], 0.0) + r["m"]
-            own[f"{r['term']}|{r['segment_id']}"] = r["m"]
-        tot_pairs = []
-        for s, v in totals.items():
-            tot_pairs.extend([F.lit(s), F.lit(v)])
-        own_pairs = []
-        for ky, v in own.items():
-            own_pairs.extend([F.lit(ky), F.lit(v)])
-        other = (
-            F.element_at(F.create_map(*tot_pairs), F.col("segment_id"))
-            - F.element_at(
-                F.create_map(*own_pairs),
-                F.concat_ws("|", F.col("term"), F.col("segment_id")),
-            )
-        )
-        if theta_lit is not None:
-            survivors = prunable.filter(
-                F.col("_ub") + other >= F.lit(theta_lit)
-            ).drop("_ub")
-        else:
-            survivors = (
-                prunable.join(F.broadcast(theta_df))
-                .filter(F.col("_ub") + other >= F.col("_theta"))
-                .drop("_ub", "_theta")
-            )
-    else:
-        uniq = sorted(set(scored))
-        seg_bounds = hdr.groupBy("segment_id").agg(*[
-            F.coalesce(
-                F.max(F.when(F.col("term") == t, F.col("_ub"))), F.lit(0.0)
-            ).alias(f"_ub{i}")
-            for i, t in enumerate(uniq)
-        ])
-        tot = sum(F.col(f"_ub{i}") for i in range(len(uniq)))
-        my_ub = None
-        for i, t in enumerate(uniq):
-            cond = F.col("term") == t
-            my_ub = F.when(cond, F.col(f"_ub{i}")) if my_ub is None else my_ub.when(cond, F.col(f"_ub{i}"))
-        joined = prunable.join(F.broadcast(seg_bounds), "segment_id")
-        if theta_lit is not None:
-            survivors = joined.filter(
-                F.col("_ub") + (tot - my_ub) >= F.lit(theta_lit)
-            ).drop("_ub", *[f"_ub{i}" for i in range(len(uniq))])
-        else:
-            survivors = (
-                joined.join(F.broadcast(theta_df))
-                .filter(F.col("_ub") + (tot - my_ub) >= F.col("_theta"))
-                .drop("_ub", "_theta", *[f"_ub{i}" for i in range(len(uniq))])
-            )
-    if anchor_terms:
-        survivors = blocks.filter(F.col("term").isin(anchor_terms)).unionByName(
-            survivors
-        )
-    return survivors
-
-
 #: Batch bound-table cap: the batch pruning path collects per-(segment,
 #: term) max-ub rows for the union of pure-should batch terms. Beyond
 #: this many rows the driver-side threshold fold (and either survivor
@@ -456,10 +219,11 @@ def wand_blocks_for_batch(
     terms: list[str],
     wand_min_postings: int,
 ) -> DataFrame | None:
-    """Block-max pruning for a :func:`sparktext.query.search_many` batch
-    (B10 x batch): returns the posting-block rows the shared batch
-    decode must cover, or ``None`` when pruning is inapplicable (the
-    caller then decodes the full union — results identical either way).
+    """Block-max pruning (B10) for a :func:`sparktext.query.search_many`
+    batch, and for :func:`sparktext.query.matched_docs` as a batch of
+    one: returns the posting-block rows the shared decode must cover, or
+    ``None`` when pruning is inapplicable (the caller then decodes the
+    full union — results identical either way).
 
     A block survives iff it survives for ANY query — folded driver-side
     into ONE per-(term, segment) threshold so the survivor filter stays
@@ -471,11 +235,11 @@ def wand_blocks_for_batch(
                     / boost_q(t)
         keep B of term t in segment s  iff  ub_raw(B) >= thr(t, s)
 
-    Correctness per query follows the single-query argument: q's
+    Correctness per query follows the module-level argument: q's
     survivor set here is a SUPERSET of its own WAND survivors (the min
     only lowers thresholds), every true top-k doc of q keeps all its
     blocks, and extra kept blocks only add exactly-scored candidates —
-    equality with the exhaustive batch is asserted in tests.
+    equality with the exhaustive plan is asserted in tests.
 
     Sharing structure (the whole point — fixed cost is paid ONCE for
     the batch, not per query): one header-cache job collects the
@@ -488,13 +252,15 @@ def wand_blocks_for_batch(
 
     Scope guards (each falls back to ``None`` = exhaustive):
 
-    - tombstones poison θ (same as single-query WAND) — skip;
+    - tombstones poison θ (a deleted doc can hold the seeded k-th best
+      score, lifting θ above the best alive one) — skip;
     - candidate postings below ``wand_min_postings`` — pruning cannot
       repay its two extra tiny jobs;
-    - queries with must/must_not clauses (their boolean filters need
-      full postings of THEIR terms) or non-positive boosts anchor all
-      their terms: those blocks are always kept, and only terms used
-      exclusively by pure-should queries are pruned;
+    - queries with must/must_not or quoted phrase clauses (boolean
+      filters need full postings of THEIR terms; phrase scores have no
+      block bound) or non-positive boosts anchor all their terms: those
+      blocks are always kept, and only terms used exclusively by
+      pure-should queries are pruned;
     - a bound table beyond :data:`WAND_BATCH_BOUNDS_MAX` rows.
     """
     import pandas as pd
@@ -513,7 +279,7 @@ def wand_blocks_for_batch(
     for qid, q in live.items():
         sp = [t for t in q.scored_terms if t in stats_map]
         if (
-            not q.must and not q.must_not and sp
+            not q.must and not q.must_not and not q.phrases and sp
             and all(b > 0 for b in q.boosts.values())
         ):
             pure[qid] = (q, sp)
@@ -649,4 +415,4 @@ def wand_blocks_for_batch(
         survivors = blocks.filter(F.col("term").isin(anchored_all)).unionByName(
             survivors
         )
-    return survivors.alias("wand_batch_pruned")
+    return survivors.alias("wand_pruned")

@@ -53,32 +53,69 @@ def test_agg_search_rejects_wand_with_aggs(micro_index):
     out["release"]()
 
 
-def test_no_cache_growth_over_query_loop(spark, micro_index):
+def test_no_cache_growth_over_query_loop(spark, micro_index, micro_corpus):
     """Storage must not grow across repeated queries: WAND path holds no
-    persist, agg_search releases its matched set."""
+    persist, agg_search releases its matched set, and a phrase-carrying
+    batch caches nothing (each round quotes a different phrase, so a
+    per-call persist could not hide behind an already-cached plan)."""
     from sparktext.aggs import CountAgg, agg_search
-    from sparktext.query import matched_docs, parse_query
+    from sparktext.build import build_index
+    from sparktext.query import matched_docs, parse_query, search_many
     from sparktext.topk import top_k
 
     def n_cached():
         return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
 
-    # warm once (index tables themselves are intentionally persisted)
-    out = agg_search(micro_index, "heavy", k=3, metric_aggs=[CountAgg()])
-    out["metrics"].collect()
-    out["hits"].collect()
-    out["release"]()
-    top_k(matched_docs(micro_index, parse_query("heavy apple"),
-                       exhaustive=False, k=3), 3).collect()
-    base = n_cached()
-    for _ in range(5):
+    pos_index = build_index(spark, micro_corpus, num_segments=2, with_positions=True)
+    phrases = ["apple banana", "banana heavy", "heavy cherry", "date egg",
+               "egg fig", "fig grape"]
+
+    def one_round(phrase):
         out = agg_search(micro_index, "heavy", k=3, metric_aggs=[CountAgg()])
         out["metrics"].collect()
         out["hits"].collect()
         out["release"]()
         top_k(matched_docs(micro_index, parse_query("heavy apple"),
                            exhaustive=False, k=3), 3).collect()
-    assert n_cached() <= base
+        search_many(pos_index, {"p": f'"{phrase}" heavy',
+                                "q": f'+grape -"{phrase}"',
+                                "r": "heavy"}, k=3).collect()
+
+    try:
+        # warm once (index tables themselves are intentionally persisted)
+        one_round(phrases[0])
+        base = n_cached()
+        for phrase in phrases[1:]:
+            one_round(phrase)
+        assert n_cached() <= base
+    finally:
+        pos_index.unpersist()
+
+
+def test_unpersist_releases_build_caches(spark, micro_corpus):
+    """Index.unpersist() releases every cache build_index made, the
+    build intermediates included (the fused build output; the positions
+    path's corpus and token rows), on both build paths."""
+    from sparktext.build import build_index
+    from sparktext.query import matched_docs, parse_query
+
+    def n_cached():
+        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+    # a corpus plan of its own: releasing a cache can also drop other
+    # session caches built over the same plan (other micro indexes)
+    corpus = micro_corpus.filter("doc_id < 11")
+    for with_positions in (False, True):
+        before = n_cached()
+        idx = build_index(spark, corpus, num_segments=2,
+                          with_positions=with_positions)
+        matched_docs(idx, parse_query('+heavy apple -date')).collect()
+        idx.doc_meta.count()
+        idx.block_headers().count()
+        if with_positions:
+            idx.positions.count()
+        idx.unpersist()
+        assert n_cached() == before, with_positions
 
 
 def test_training_data_pipeline(spark):

@@ -127,7 +127,13 @@ def test_search_many_dedups_identical_queries(micro_index):
 
 def test_auto_prune_gate_skips_small_batches(micro_index, monkeypatch):
     """Round 6 default (exhaustive=None): the batch volume gate must NOT
-    attempt pruning on a tiny batch (fixed driver jobs would dominate)."""
+    attempt pruning on a tiny batch (fixed driver jobs would dominate).
+    The volume is the SUM over queries of each query's candidate
+    postings, not (union postings x live queries): three disjoint
+    single-term queries (heavy 10 + date 4 + unique 1 = 15 postings)
+    stay exhaustive under a gate of 30, which the union formula
+    (15 x 3 = 45) would open; a gate of 15 opens."""
+    import sparktext.query as query_mod
     import sparktext.score as score_mod
     from sparktext.query import search_many
 
@@ -141,6 +147,13 @@ def test_auto_prune_gate_skips_small_batches(micro_index, monkeypatch):
     monkeypatch.setattr(score_mod, "wand_blocks_for_batch", spy)
     search_many(micro_index, {"a": "apple", "b": "banana cherry"}, k=3).collect()
     assert calls == []
+    disjoint = {"a": "heavy", "b": "date", "c": "unique"}
+    monkeypatch.setattr(query_mod, "WAND_BATCH_MIN_VOLUME", 30)
+    search_many(micro_index, disjoint, k=3).collect()
+    assert calls == []
+    monkeypatch.setattr(query_mod, "WAND_BATCH_MIN_VOLUME", 15)
+    search_many(micro_index, disjoint, k=3).collect()
+    assert len(calls) == 1
 
 
 def test_auto_prune_gate_fires_and_results_identical(micro_index, monkeypatch):
