@@ -1,7 +1,7 @@
 """Benchmark harness (driver contract + BASELINE.md scaling evidence).
 
 Runs at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` (default 32). Prints ONE JSON line:
+``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs this process may use). Prints ONE JSON line:
 ``{"metric": ..., "value": <total sec>, "unit": "sec",
 "queries": {name: sec}, "sf": ..., ...extras}``.
 
@@ -25,7 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
 
     from sparktext.session import get_spark

@@ -9,33 +9,34 @@ supplied dense ``doc_id``. The build:
 2. assigns deterministic dense ``doc_id`` (order by repo, path, commit)
    when absent, using the scalable two-phase pattern (per-partition
    row_number + collected partition offsets — no global window),
-3. assigns ``segment_id = doc_id // ceil(N / num_segments)`` (contiguous
-   doc ranges per segment: cheap gap encoding, disjoint segment ranges,
-   trivially mergeable),
-4. ONE tokenize pass per document (mapInPandas, Arrow batches, vectorized
-   pandas inside): emits posting rows AND doc-length rows from the same
-   scan, persisted so the doc_meta/postings/term_dict branches share it —
-   the Spark idiom for tantivy's single indexing pass,
-5. per-(segment, term) sorted posting lists, chunked into 128-doc blocks
-   with delta+FOR/varint compression and inline fieldnorm bytes
-   (:mod:`sparktext.codec`),
-6. a global ``term_dict(term, doc_freq, total_tf)`` — the broadcast-side
+3. assigns segments, one per partition: the doc-id assignment's range
+   partitions (contiguous doc ranges), a well-split input's own
+   partitions, or ``segment_id = doc_id // ceil(N / num_segments)``
+   (always the last on the persisted path, whose resume needs
+   boundaries independent of range sampling),
+4. ONE fused tokenize + encode pass per segment (:func:`build_segments`,
+   mapInPandas over Arrow batches): per-(segment, term) sorted posting
+   lists chunked into 128-doc blocks with delta+FOR/varint compression
+   and inline fieldnorm bytes (:mod:`sparktext.codec`), one doc-meta row
+   per doc, and (``with_positions``) one positions row per (doc, term) —
+   persisted once, so postings, doc_meta and positions are filter views
+   of one cache: the Spark idiom for tantivy's single ``SegmentWriter``.
+   The in-memory build, each persisted segment group and every append
+   go through it,
+5. a global ``term_dict(term, doc_freq, total_tf)`` derived from block
+   headers (:func:`term_dict_from_blocks`) — the broadcast-side
    statistics for BM25 — plus corpus stats (num_docs, total_tokens).
 
-Scale notes: posting-group size is bounded by the segment size, so the
-applyInPandas groups can't blow up on heavy terms (§4.7 skew bound);
+Scale notes: posting-group size is bounded by the segment size, so no
+worker holds more than one segment's tokens (§4.7 skew bound; merge and
+facets re-encode through the salted :func:`encode_posting_blocks`);
 ``term_bucket = pmod(xxhash64(term), n_buckets)`` is written as a parquet
 partition column so query-time term filters prune files (§4.1). Postings
 are keyed by the term STRING (no dense term-id indirection) — a global
 dense term-id assignment would need an extra near-global sort at 10^12
 scale for zero query-time benefit when the dictionary is broadcast anyway.
 
-Persisted layout under ``index_dir`` (A12): ``postings/`` (parquet,
-partitioned by term_bucket), ``doc_meta/``, ``term_dict/``, ``stats/``,
-``_manifest/`` + ``_metrics/`` (lineage: one row per segment-group with
-row/byte counts, an xxhash64 input fingerprint and wall-clock). Builds are
-resumable: completed segment-groups recorded in the manifest are skipped
-on re-run (see :func:`build_index` ``resume``).
+Persisted layout under ``index_dir`` (A12): see :mod:`sparktext.manifest`.
 """
 
 from __future__ import annotations
@@ -43,6 +44,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 from dataclasses import field as dc_field
+from functools import partial
 from typing import Iterator
 
 import numpy as np
@@ -52,17 +54,11 @@ from pyspark.sql import functions as F
 
 from sparktext import codec
 from sparktext.fieldnorm import fieldnorm_to_id
-from sparktext.tokenizer import tokenize_flat, tokenize_flat_arrow
+from sparktext.tokenizer import tokenize_flat_arrow
 
 DEFAULT_N_BUCKETS = 16
 
 CORPUS_COLS = ("repo", "path", "commit", "lang", "content")
-
-_TOKENS_SCHEMA = (
-    "kind tinyint, segment_id int, doc_id long, term string, tf int, doc_len int"
-)
-_TOKENS_SCHEMA_POS = _TOKENS_SCHEMA + ", positions array<int>"
-
 
 @dataclass
 class IndexStats:
@@ -95,7 +91,7 @@ class Index:
     deleted: DataFrame | None = None  # doc_id
     _headers: DataFrame | None = None  # lazy block-header mini-cache
     #: build intermediates the index's frames read through (the fused
-    #: build output, or the positions path's corpus and token rows)
+    #: build output cache)
     _build_caches: list = dc_field(default_factory=list)
     #: optional facet postings (tantivy `facet` field): same block codec
     #: as ``postings`` but terms are '/a/b' ancestor paths; see with_facets
@@ -222,70 +218,9 @@ def assign_doc_ids(
     return out if keep_pid else out.drop("_pid")
 
 
-def _tokenize_partition(
-    batches: Iterator[pd.DataFrame], with_positions: bool = False
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: one tokenize pass -> posting rows + meta rows.
-
-    kind=0 rows: (segment_id, doc_id, term, tf, doc_len[, positions]) — one
-    per distinct (doc, term). kind=1 rows: (segment_id, doc_id, doc_len) —
-    one per doc (term null), so zero-token docs still reach doc_meta.
-    """
-    for pdf in batches:
-        n = len(pdf)
-        if n == 0:
-            continue
-        row_idx, terms = tokenize_flat(pdf["content"])
-        doc_ids = pdf["doc_id"].to_numpy()
-        seg_ids = pdf["segment_id"].to_numpy()
-        doc_len = np.zeros(n, dtype=np.int64)
-        if row_idx.size:
-            np.add.at(doc_len, row_idx, 1)
-            tok = pd.DataFrame({"i": row_idx, "term": terms})
-            if with_positions:
-                # token position within its doc = running count per row
-                tok["pos"] = tok.groupby("i", sort=False).cumcount().astype(np.int32)
-                grp = (
-                    tok.groupby(["i", "term"], sort=False)["pos"]
-                    .agg(list)
-                    .reset_index(name="positions")
-                )
-                grp["tf"] = grp["positions"].str.len()
-            else:
-                grp = tok.groupby(["i", "term"], sort=False).size().reset_index(name="tf")
-            gi = grp["i"].to_numpy()
-            postings = pd.DataFrame(
-                {
-                    "kind": np.zeros(len(grp), dtype=np.int8),
-                    "segment_id": seg_ids[gi],
-                    "doc_id": doc_ids[gi],
-                    "term": grp["term"].to_numpy(),
-                    "tf": grp["tf"].to_numpy().astype(np.int32),
-                    "doc_len": doc_len[gi],
-                }
-            )
-            if with_positions:
-                postings["positions"] = grp["positions"].to_numpy()
-        else:
-            postings = None
-        meta = pd.DataFrame(
-            {
-                "kind": np.ones(n, dtype=np.int8),
-                "segment_id": seg_ids,
-                "doc_id": doc_ids,
-                "term": pd.Series([None] * n, dtype="object"),
-                "tf": np.zeros(n, dtype=np.int32),
-                "doc_len": doc_len,
-            }
-        )
-        if with_positions:
-            meta["positions"] = pd.Series([None] * n, dtype="object")
-        yield pd.concat([postings, meta], ignore_index=True) if postings is not None else meta
-
-
-#: doc-metadata columns carried through the fused worker (nullable on
-#: block rows). n_chars is always in the schema; null when absent.
-_META_CARRY = ("repo", "path", "commit", "lang", "sha")
+#: doc-metadata columns carried through the fused worker (null on
+#: block and positions rows; n_chars also null when the corpus lacks it)
+_META_CARRY = ("repo", "path", "commit", "lang", "sha", "n_chars")
 
 _FUSED_SCHEMA = (
     "kind tinyint, segment_id int, term string, block_id int, count int, "
@@ -293,30 +228,46 @@ _FUSED_SCHEMA = (
     "doc_bits int, doc_bytes binary, tf_bytes binary, norm_bytes binary, "
     "doc_id long, doc_len int, norm_id int, "
     "repo string, path string, commit string, lang string, sha string, "
-    "n_chars long"
+    "n_chars long, positions array<int>"
 )
 _FUSED_COLS = [c.split()[0] for c in _FUSED_SCHEMA.split(", ")]
 
 
-def _build_segment_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _fused_frame(kind: int, cols) -> pd.DataFrame:
+    """One output frame of the fused worker: ``cols`` under ``kind``,
+    null in every other fused column."""
+    df = pd.DataFrame(cols)
+    df.insert(0, "kind", np.int8(kind))
+    for c in _FUSED_COLS:
+        if c not in df.columns:
+            df[c] = None
+    return df[_FUSED_COLS]
+
+
+def _build_segment_partition(
+    batches: Iterator[pd.DataFrame], with_positions: bool = False
+) -> Iterator[pd.DataFrame]:
     """Fused per-partition index build (SURVEY A4's preferred shape):
     tokenize AND encode posting blocks inside ONE mapInPandas pass —
     segment == partition, so no token-level shuffle and no token-level
     persist ever materializes. Emits kind=0 block rows (BLOCK_SCHEMA
-    fields) + kind=1 doc rows carrying the FULL doc metadata incl.
-    norm_id, so doc_meta needs no downstream join at all.
+    fields), kind=1 doc rows carrying the FULL doc metadata incl.
+    norm_id (so doc_meta needs no downstream join at all) and, with
+    ``with_positions``, kind=2 rows ``(segment_id, term, doc_id,
+    positions)``: the token indexes of each (doc, term) pair, in the
+    same key order as the tf runs.
 
     The token stream stays off the Python heap end-to-end: per batch,
     :func:`tokenize_flat_arrow` yields tokens as ONE Arrow string buffer;
     the partition-level accumulation concatenates buffers; a single
     C++ ``dictionary_encode`` maps every token to an int32 code; the
-    (doc, term)->tf aggregation is ``np.unique`` over a fused
-    ``code*NDOCS+docpos`` int64 key. Object-dtype string arrays (60+
-    bytes/token of pointer-chased heap) were the DRAM-bandwidth term
-    that capped 8->32-core build scaling at ~0.6 efficiency; the Arrow
-    buffer is ~6x denser and the grouping touches only ints. Term
-    STRINGS materialize exactly once per (segment, term) run for the
-    output block rows.
+    (doc, term)->tf aggregation runs over a fused ``code*NDOCS+docpos``
+    int64 key. Object-dtype string arrays (60+ bytes/token of
+    pointer-chased heap) were the DRAM-bandwidth term that capped
+    8->32-core build scaling at ~0.6 efficiency; the Arrow buffer is
+    ~6x denser and the grouping touches only ints. Term STRINGS
+    materialize once per (segment, term) run for the block rows (and
+    once per (doc, term) pair for positions rows).
 
     Memory is bounded by segment sizing (seg_size docs), which the
     caller controls — the knob that must scale with executor memory.
@@ -346,31 +297,33 @@ def _build_segment_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.Dat
         seg_parts.append(seg_ids)
         did_parts.append(doc_ids)
         dlen_parts.append(doc_len)
-        mp = pd.DataFrame(
-            {"segment_id": seg_ids, "doc_id": doc_ids, "doc_len": doc_len}
-        )
-        mp["norm_id"] = fieldnorm_to_id(doc_len).astype(np.int32)
+        mp = pd.DataFrame({
+            "segment_id": seg_ids, "doc_id": doc_ids,
+            "doc_len": doc_len.astype(np.int32),
+            "norm_id": fieldnorm_to_id(doc_len).astype(np.int32),
+        })
         for c in _META_CARRY:
             mp[c] = pdf[c].to_numpy() if c in pdf.columns else None
-        mp["n_chars"] = (
-            pdf["n_chars"].to_numpy() if "n_chars" in pdf.columns else np.int64(0)
-        )
-        if "n_chars" not in pdf.columns:
-            mp["n_chars"] = None
         meta_parts.append(mp)
         n_seen += n
 
-    # Blocks and meta are emitted as SEPARATE Arrow frames (same schema):
-    # concatenating them forced pandas through object-NA reconciliation on
-    # every carry column — measurable churn at 32 concurrent workers.
+    # Each kind is emitted as its own frame (same schema): concatenating
+    # them forced pandas through object-NA reconciliation on every carry
+    # column — measurable churn at 32 concurrent workers.
     if tok_arrays:
         flat = pa.concat_arrays(
             a.combine_chunks() if isinstance(a, pa.ChunkedArray) else a
             for a in tok_arrays
         )
         enc = pc.dictionary_encode(flat)
-        codes = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-        vocab = enc.dictionary
+        # Renumber codes in term-string order, so every output section
+        # is term-sorted and cached batches carry narrow term min/max
+        # stats that a term filter can skip on.
+        rank = pc.array_sort_indices(enc.dictionary).to_numpy()
+        vocab = enc.dictionary.take(pa.array(rank))
+        remap = np.empty(rank.size, dtype=np.int64)
+        remap[rank] = np.arange(rank.size)
+        codes = remap[enc.indices.to_numpy(zero_copy_only=False)]
         docpos = np.concatenate(tok_docpos)
         seg_all = np.concatenate(seg_parts)
         did_all = np.concatenate(did_parts)
@@ -379,7 +332,8 @@ def _build_segment_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.Dat
         # raw tokens (value_counts, O(T)), then sort only the ~T/2
         # aggregated pairs — measured 2-4x faster than np.unique's full
         # sort of the raw token stream.
-        vc = pd.Series(codes * np.int64(n_seen) + docpos).value_counts(sort=False)
+        key = codes * np.int64(n_seen) + docpos
+        vc = pd.Series(key).value_counts(sort=False)
         uk = vc.index.to_numpy()
         tf_g = vc.to_numpy()
         o = np.argsort(uk, kind="stable")
@@ -389,10 +343,21 @@ def _build_segment_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.Dat
         seg_g = seg_all[pos_g]
         did_g = did_all[pos_g]
         nid_g = fieldnorm_to_id(dlen_all[pos_g])
+        if with_positions:
+            # Tokens arrive in (doc, position) order, so a token's index
+            # in its doc is its stream index minus the doc's first one; a
+            # stable sort on the key groups them into the tf runs above.
+            first = np.cumsum(dlen_all) - dlen_all
+            tok_pos = (np.arange(key.size) - first[docpos]).astype(np.int32)
+            offsets = np.zeros(tf_g.size + 1, dtype=np.int32)
+            np.cumsum(tf_g, out=offsets[1:])
+            pos_lists = pa.ListArray.from_arrays(
+                pa.array(offsets), pa.array(tok_pos[np.argsort(key, kind="stable")])
+            )
         # Run order needed: (segment, term) groups contiguous, doc_id
         # ascending inside. When partition row order is already doc_id-
         # ascending with monotone segments (every built-in assignment
-        # path), the unique output is already exactly that — skip the
+        # path), the sorted keys are already exactly that — skip the
         # sort. Arbitrary caller-supplied orders fall back to a lexsort.
         monotonic = (
             did_all.size < 2
@@ -402,6 +367,8 @@ def _build_segment_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.Dat
             order = np.lexsort((did_g, code_g, seg_g))
             code_g, seg_g, did_g = code_g[order], seg_g[order], did_g[order]
             tf_g, nid_g = tf_g[order], nid_g[order]
+            if with_positions:
+                pos_lists = pos_lists.take(pa.array(order))
         change = np.empty(len(code_g), dtype=bool)
         change[0] = True
         change[1:] = (code_g[1:] != code_g[:-1]) | (seg_g[1:] != seg_g[:-1])
@@ -418,41 +385,16 @@ def _build_segment_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.Dat
             records.extend(rows)
         blocks = pd.DataFrame.from_records(records)
         blocks["segment_id"] = blocks["segment_id"].astype(np.int32)
-        blocks.insert(0, "kind", np.int8(0))
-        blocks["doc_id"] = np.int64(0)
-        blocks["doc_len"] = np.int32(0)
-        blocks["norm_id"] = np.int32(0)
-        for c in _META_CARRY:
-            blocks[c] = None
-        blocks["n_chars"] = None
-        yield blocks[_FUSED_COLS]
+        yield _fused_frame(0, blocks)
+        if with_positions:
+            yield _fused_frame(2, {
+                "segment_id": seg_g.astype(np.int32),
+                "term": vocab.take(pa.array(code_g)).to_numpy(zero_copy_only=False),
+                "doc_id": did_g,
+                "positions": pos_lists.to_numpy(zero_copy_only=False),
+            })
     if meta_parts:
-        meta = pd.concat(meta_parts, ignore_index=True)
-        mf = pd.DataFrame(
-            {
-                "kind": np.int8(1),
-                "segment_id": meta["segment_id"].to_numpy(),
-                "term": pd.Series([None] * len(meta), dtype="object"),
-                "block_id": np.int32(0),
-                "count": np.int32(0),
-                "first_doc": np.int64(0),
-                "last_doc": np.int64(0),
-                "max_tf": np.int32(0),
-                "sum_tf": np.int64(0),
-                "min_norm_id": np.int32(0),
-                "doc_bits": np.int32(0),
-                "doc_bytes": None,
-                "tf_bytes": None,
-                "norm_bytes": None,
-                "doc_id": meta["doc_id"].to_numpy(),
-                "doc_len": meta["doc_len"].to_numpy().astype(np.int32),
-                "norm_id": meta["norm_id"].to_numpy(),
-            }
-        )
-        for c in _META_CARRY:
-            mf[c] = meta[c].to_numpy()
-        mf["n_chars"] = meta["n_chars"].to_numpy()
-        yield mf[_FUSED_COLS]
+        yield _fused_frame(1, pd.concat(meta_parts, ignore_index=True))
 
 
 #: Salt chunk (§4.7): posting rows are grouped by (segment, term,
@@ -465,11 +407,11 @@ def _build_segment_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.Dat
 SALT_CHUNK = 16384
 
 
-def _build_blocks_salted(key, pdf: pd.DataFrame) -> pd.DataFrame:
+def _build_blocks_salted(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
     """applyInPandas worker: one (segment, term, salt) run -> encoded blocks.
 
     norm_id may come pre-computed (merge path) or be derived from doc_len
-    (build path).
+    (facet path).
     """
     segment_id, term = key[0], key[1]
     order = np.argsort(pdf["doc_id"].to_numpy(), kind="stable")
@@ -498,7 +440,7 @@ def encode_posting_blocks(
     renumber block_id per (segment, term) ordered by first_doc. The
     renumber window runs over BLOCK HEADERS (128x smaller than postings),
     so the extra exchange is cheap; the win is bounded task memory and
-    heavy-term parallelism at build AND merge time.
+    heavy-term parallelism at merge and facet-encode time.
     """
     spark = posting_rows.sparkSession
     n_shuffle = shuffle_partitions or spark.sparkContext.defaultParallelism * 2
@@ -519,6 +461,54 @@ def encode_posting_blocks(
 
 def term_bucket_col(term_col, n_buckets: int):
     return F.pmod(F.xxhash64(term_col), F.lit(n_buckets)).cast("int")
+
+
+def term_dict_from_blocks(postings: DataFrame, n_buckets: int) -> DataFrame:
+    """A6: the global ``term_dict(term, doc_freq, total_tf, term_bucket)``
+    derived from BLOCK HEADERS (128x fewer rows than postings). The
+    groupBy is algebraic -> map-side partial aggregation already defuses
+    term skew for these sums."""
+    return (
+        postings.groupBy("term")
+        .agg(F.sum("count").alias("doc_freq"), F.sum("sum_tf").alias("total_tf"))
+        .withColumn("term_bucket", term_bucket_col(F.col("term"), n_buckets))
+    )
+
+
+def build_segments(corpus: DataFrame, n_buckets: int, with_positions: bool):
+    """The one segment writer: tokenize + block-encode a corpus that
+    already carries ``doc_id`` and ``segment_id`` (one segment per
+    partition) in ONE fused mapInPandas pass, persisted once. Returns
+    ``(fused, postings, doc_meta, positions)``: the cache, then filter
+    views over it (``positions`` is None without ``with_positions``).
+    The caller owns the cache and unpersists it when done."""
+    carry = [c for c in _META_CARRY if c in corpus.columns]
+    fused = (
+        corpus.select("doc_id", "segment_id", "content", *carry)
+        .mapInPandas(
+            partial(_build_segment_partition, with_positions=with_positions),
+            schema=_FUSED_SCHEMA,
+        )
+        .persist()
+    )
+    kind = F.col("kind")
+    postings = (
+        fused.filter(kind == 0)
+        .select("segment_id", "term", "block_id", "count", "first_doc",
+                "last_doc", "max_tf", "sum_tf", "min_norm_id",
+                "doc_bits", "doc_bytes", "tf_bytes", "norm_bytes")
+        .withColumn("term_bucket", term_bucket_col(F.col("term"), n_buckets))
+    )
+    doc_meta = fused.filter(kind == 1).select(
+        "doc_id", "segment_id", "repo", "path", "commit", "lang", "sha",
+        "doc_len", "norm_id",
+        *(["n_chars"] if "n_chars" in corpus.columns else []),
+    )
+    positions = (
+        fused.filter(kind == 2).select("segment_id", "term", "doc_id", "positions")
+        if with_positions else None
+    )
+    return fused, postings, doc_meta, positions
 
 
 def build_index(
@@ -548,16 +538,14 @@ def build_index(
 
     if num_segments is None:
         num_segments = max(4, spark.sparkContext.defaultParallelism)
-    assigned = "doc_id" not in corpus.columns
     _id_caches: list = []
-    corpus = assign_doc_ids(corpus, num_segments, keep_pid=assigned, _cache_out=_id_caches)
-    n_docs = corpus.count()
-    seg_size = max(1, math.ceil(n_docs / num_segments))
-    if assigned:
+    if "doc_id" not in corpus.columns:
         # The doc-id assignment's window already co-located each range
         # partition (= a contiguous doc range) — adopt it as the segment
         # and SKIP the second full-corpus shuffle entirely.
-        corpus = with_sha(corpus.withColumnRenamed("_pid", "segment_id"))
+        corpus = assign_doc_ids(
+            corpus, num_segments, keep_pid=True, _cache_out=_id_caches
+        ).withColumnRenamed("_pid", "segment_id")
     elif corpus.rdd.getNumPartitions() >= max(num_segments // 2, 2):
         # Caller-supplied doc ids AND a well-split input: adopt the input
         # partitions as segments outright — zero shuffle. Segments become
@@ -566,103 +554,35 @@ def build_index(
         # posting lists are sorted in the worker, scores are
         # segmentation-independent, and merge re-derives segmentation).
         # Sparse in-segment doc ids cost a few extra delta bits per gap.
-        corpus = with_sha(corpus.withColumn("segment_id", F.spark_partition_id()))
+        corpus = corpus.withColumn("segment_id", F.spark_partition_id())
     else:
         # Few-partition input (e.g. one small local file): repartition
         # BEFORE the sha projection so per-row prep runs post-exchange —
-        # and so one source file can't serialize the whole build.
-        corpus = with_sha(
-            corpus.withColumn(
-                "segment_id", (F.col("doc_id") / F.lit(seg_size)).cast("int")
-            ).repartition(num_segments, "segment_id")
-        )
+        # and so one source file can't serialize the whole build. The
+        # contiguous doc-range segments need the doc count first.
+        seg_size = max(1, math.ceil(corpus.count() / num_segments))
+        corpus = corpus.withColumn(
+            "segment_id", (F.col("doc_id") / F.lit(seg_size)).cast("int")
+        ).repartition(num_segments, "segment_id")
 
-    positions = None
-    if with_positions:
-        corpus = corpus.persist()  # two consumers on this path
-        # positions path: token-level rows are needed anyway, so use the
-        # two-step build (tokenize rows -> salted encode).
-        tokens = (
-            corpus.select("doc_id", "segment_id", "content")
-            .mapInPandas(
-                lambda it: _tokenize_partition(it, with_positions=True),
-                schema=_TOKENS_SCHEMA_POS,
-            )
-            .persist()
-        )
-        build_caches = [corpus, tokens]
-        posting_rows = tokens.filter(F.col("kind") == 0).drop("kind")
-        meta_rows = tokens.filter(F.col("kind") == 1).select("doc_id", "doc_len")
-        positions = posting_rows.select("segment_id", "term", "doc_id", "positions").persist()
-        postings = encode_posting_blocks(posting_rows.drop("positions"), n_buckets).persist()
-    else:
-        # Fused fast path (SURVEY A4): tokenize + block-encode in ONE
-        # mapInPandas over segment partitions — zero token-level shuffle;
-        # the persisted intermediate is block headers + doc-meta rows
-        # (~100x smaller than token rows), and doc_meta comes straight
-        # out of the same pass (no join, no second corpus scan).
-        carry = [c for c in (*_META_CARRY, "n_chars") if c in corpus.columns]
-        fused = (
-            corpus.select("doc_id", "segment_id", "content", *carry)
-            .mapInPandas(_build_segment_partition, schema=_FUSED_SCHEMA)
-            .persist()
-        )
-        build_caches = [fused]
-        # ONE cache holds the build output: postings/doc_meta are filter
-        # views over it. Cache writes are the one build phase that does
-        # NOT scale with cores (MemoryStore contention measured 2x slower
-        # at local[32] than local[8] on identical data), so the build
-        # persists each output row exactly once and nothing twice.
-        postings = (
-            fused.filter(F.col("kind") == 0)
-            .select("segment_id", "term", "block_id", "count", "first_doc",
-                    "last_doc", "max_tf", "sum_tf", "min_norm_id",
-                    "doc_bits", "doc_bytes", "tf_bytes", "norm_bytes")
-            .withColumn("term_bucket", term_bucket_col(F.col("term"), n_buckets))
-        )
-        meta_rows = fused.filter(F.col("kind") == 1).select("doc_id", "doc_len")
-        doc_meta = fused.filter(F.col("kind") == 1).select(
-            "doc_id", "segment_id", *_META_CARRY, "doc_len", "norm_id",
-            *(["n_chars"] if "n_chars" in corpus.columns else []),
-        )
-
-    # A6: global term statistics, derived from BLOCK HEADERS (128x fewer
-    # rows than postings). The groupBy is algebraic -> map-side partial
-    # aggregation already defuses term skew for these sums.
-    term_dict = (
-        postings.groupBy("term")
-        .agg(F.sum("count").alias("doc_freq"), F.sum("sum_tf").alias("total_tf"))
-        .withColumn("term_bucket", term_bucket_col(F.col("term"), n_buckets))
-        .persist()
+    fused, postings, doc_meta, positions = build_segments(
+        with_sha(corpus), n_buckets, with_positions
     )
-
-    if with_positions:
-        norm_udf = F.pandas_udf(
-            lambda s: pd.Series(fieldnorm_to_id(s.to_numpy()).astype(np.int32)), "int"
-        )
-        doc_meta = (
-            corpus.join(meta_rows, "doc_id")
-            .withColumn("norm_id", norm_udf(F.col("doc_len")))
-            .select(
-                "doc_id", "segment_id", "repo", "path", "commit", "lang",
-                "doc_len", "norm_id", "sha",
-                *(["n_chars"] if "n_chars" in corpus.columns else []),
-            )
-        )
-    if with_positions:
-        doc_meta = doc_meta.persist()
-
-    # First action on the fused pipeline: materializes shuffle + tokenize
-    # + encode + persist, then the tiny stats aggregate reads the cache.
-    total_tokens = meta_rows.agg(F.sum("doc_len")).collect()[0][0] or 0
-    # The fused/tokens cache is materialized now; the doc-id assignment's
-    # ranged cache has served its purpose — release it.
+    # Term scans get their own compact cache of block rows: the fused
+    # cache's columnar batches (10k rows) mix block, doc and positions
+    # rows, and a term filter can skip only whole batches.
+    postings = postings.persist()
+    term_dict = term_dict_from_blocks(postings, n_buckets).persist()
+    # First action: materializes tokenize + encode + the fused cache;
+    # n_docs and total_tokens come out of the same tiny aggregate.
+    srow = doc_meta.agg(F.count("*").alias("n"), F.sum("doc_len").alias("tt")).collect()[0]
+    # The doc-id assignment's ranged cache has served its purpose.
     for c in _id_caches:
         c.unpersist()
-    stats = IndexStats(num_docs=n_docs, total_tokens=int(total_tokens))
+    stats = IndexStats(num_docs=int(srow["n"]), total_tokens=int(srow["tt"] or 0))
     return Index(doc_meta=doc_meta, postings=postings, term_dict=term_dict,
                  stats=stats, n_buckets=n_buckets, positions=positions,
-                 _build_caches=build_caches)
+                 _build_caches=[fused])
 
 
 def facet_posting_rows(doc_meta: DataFrame, facet_expr: str, depth: int | None) -> DataFrame:

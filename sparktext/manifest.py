@@ -2,26 +2,34 @@
 
 Layout under ``index_dir``::
 
-    postings/    parquet, partitioned by term_bucket (query-time pruning)
-                 + group_id (checkpoint granularity)
+    postings/    parquet, partitioned by group_id (checkpoint granularity)
+                 + term_bucket (query-time pruning)
     doc_meta/    parquet, partitioned by group_id
+    positions/   (with_positions) parquet, partitioned like postings
     term_dict/   parquet (finalize output, derived from block headers)
     stats.json   num_docs, total_tokens, n_buckets, num_segments
+    geometry.json  num_segments, num_groups, with_positions (resume sidecar)
     _manifest/   parquet: one row per completed segment-group
-                 (group_id, n_docs, n_blocks, input_fingerprint, wall_ms,
-                  build_id, status)
+                 (group_id, n_docs, input_fingerprint, wall_ms, build_id,
+                  status, num_segments, num_groups, with_positions)
     _metrics/    parquet: per-stage rows (stage, group_id, rows, wall_ms)
+
+Every segment group — each group of a build and each append — is written
+the same way: :func:`sparktext.build.build_segments` (the one segment
+writer the in-memory build also uses) yields its postings, doc_meta and
+positions, :func:`_write_group` writes them, and a manifest row marks
+the group complete. Each table holds exactly the in-memory index's
+columns plus ``group_id``.
 
 Resumability (BASELINE.json north_rule "resumable from checkpoint with
 per-partition lineage + metrics"): the corpus is split into
-``num_groups`` contiguous segment-groups; each group's postings+doc_meta
-write is followed by a manifest append marking it complete. A re-run with
-``resume=True`` anti-joins the group list against the manifest and only
-processes missing groups, then re-finalizes the (cheap, vocabulary-sized)
-term dictionary from all block headers. ``input_fingerprint`` is the
-xor-free sum of xxhash64(sha) over the group's docs — lineage evidence
-that a resumed build saw the same input rows (the per-row sha256 itself
-lives in doc_meta, satisfying the content-sha invariant).
+``num_groups`` contiguous segment-groups. A re-run with ``resume=True``
+skips the groups the manifest marks complete, then re-finalizes the
+(cheap, vocabulary-sized) term dictionary from all block headers.
+``input_fingerprint`` is the order-insensitive sum of xxhash64 over each
+doc's sha and metadata — lineage evidence that a resumed build saw the
+same input rows (the per-row sha256 itself lives in doc_meta,
+satisfying the content-sha invariant).
 
 Crash-safety contract:
 
@@ -31,13 +39,10 @@ Crash-safety contract:
   no duplicate rows can survive a resume;
 - a fresh build REFUSES a non-empty ``index_dir`` (re-running with
   ``resume=False`` used to double-append everything silently);
-- the manifest records ``num_segments``/``num_groups``; a resume ADOPTS
-  the recorded values (callers resuming at different parallelism used
-  to silently skip or duplicate docs).
-
-``with_positions=True`` persists a ``positions/`` table (term_bucket-
-partitioned like postings) and ``load_index`` restores it, so phrase
-queries work on checkpointed/resumed indexes too.
+- ``geometry.json`` is written before the first group and a resume
+  ADOPTS it (callers resuming at different parallelism used to silently
+  skip or duplicate docs);
+- appends and compaction take a single-writer lock beside the index.
 """
 
 from __future__ import annotations
@@ -55,11 +60,12 @@ from sparktext.build import (
     DEFAULT_N_BUCKETS,
     Index,
     IndexStats,
-    _tokenize_partition,
-    _TOKENS_SCHEMA,
     assign_doc_ids,
+    build_segments,
     encode_posting_blocks,
+    facet_posting_rows,
     term_bucket_col,
+    term_dict_from_blocks,
     with_sha,
 )
 
@@ -71,12 +77,26 @@ class WriterLockHeld(RuntimeError):
     about to be deleted."""
 
 
+def _lock_pid(path: str):
+    """The pid recorded in a writer lock file (None if unreadable)."""
+    try:
+        with open(path) as f:
+            return json.load(f).get("pid")
+    except (OSError, ValueError):
+        return None
+
+
+def _pid_alive(pid) -> bool:
+    return pid is not None and os.path.exists(f"/proc/{pid}")
+
+
 class _writer_lock:
     """Single-writer guard shared by :func:`append_documents` and
     :func:`compact_index` (and, through append, every streaming
     micro-batch): a JSON lock file BESIDE the index directory — it must
-    survive compaction's renames of the directory itself — acquired
-    with ``O_CREAT|O_EXCL``. A live holder raises
+    survive compaction's renames of the directory itself — created
+    complete by ``link(2)``-ing a written temp file to the lock path
+    (fails if the path exists). A live holder raises
     :class:`WriterLockHeld` (fail-fast, callers retry after the swap);
     a stale lock whose pid is dead is broken with a warning. This
     enforces the contract the compaction swap protocol assumes: no
@@ -90,41 +110,46 @@ class _writer_lock:
     def __enter__(self):
         import warnings
 
-        while True:
-            try:
-                fd = os.open(self.path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                break
-            except FileExistsError:
-                pid = None
+        # The lock is born complete: write a private temp file, then
+        # link(2) it to the lock path — link fails if the path exists, so
+        # no reader ever sees an empty lock file (pid=None).
+        tmp = f"{self.path}.{os.getpid()}.{uuid.uuid4().hex[:8]}.tmp"
+        with open(tmp, "w") as f:
+            json.dump({"pid": os.getpid(), "op": self.op, "ts": time.time()}, f)
+        try:
+            while True:
                 try:
-                    with open(self.path) as f:
-                        pid = json.load(f).get("pid")
-                except (OSError, ValueError):
+                    os.link(tmp, self.path)
+                    return self
+                except FileExistsError:
                     pass
-                if pid is not None and os.path.exists(f"/proc/{pid}"):
+                pid = _lock_pid(self.path)
+                if _pid_alive(pid):
                     raise WriterLockHeld(
                         f"index writer lock {self.path!r} held by live "
                         f"pid {pid}; retry after the current writer "
                         f"(append/compact) finishes"
                     )
-                # Atomic CLAIM before breaking (closes the round-5
-                # advisory TOCTOU): rename the stale file to a per-pid
-                # name — rename(2) is atomic, so exactly ONE waiter wins
-                # the claim and proceeds to recreate; a loser's rename
-                # raises and it loops back to the O_EXCL create, where it
-                # will observe the winner's FRESH lock as live and raise.
-                # (The old unlink-based break let two waiters both
-                # observe the dead pid, then the second unlink deleted
-                # the first waiter's fresh lock — two "single" writers.)
-                # A fresh lock can only be created while self.path is
-                # absent, which requires having won this rename — so a
-                # successful claim is guaranteed to hold the stale file,
-                # never a live writer's.
+                # Atomic CLAIM before breaking: rename the stale file to a
+                # per-pid name — rename(2) is atomic, so exactly ONE waiter
+                # wins a given file; a loser's rename raises and it loops
+                # back to the create.
                 claim = f"{self.path}.stale.{os.getpid()}"
                 try:
                     os.rename(self.path, claim)
                 except FileNotFoundError:
                     continue  # another waiter claimed it first
+                # Between reading the dead pid and the rename, another
+                # waiter may have broken that lock and taken a fresh one:
+                # then this rename claimed a LIVE lock. Re-read what was
+                # claimed; anything but the dead holder goes back.
+                got = _lock_pid(claim)
+                if got != pid or _pid_alive(got):
+                    os.rename(claim, self.path)
+                    raise WriterLockHeld(
+                        f"index writer lock {self.path!r} was taken by pid "
+                        f"{got} while breaking a stale lock; retry"
+                    )
                 warnings.warn(
                     f"breaking stale index writer lock {self.path!r} "
                     f"(holder pid {pid} is dead)"
@@ -133,11 +158,8 @@ class _writer_lock:
                     os.unlink(claim)
                 except OSError:
                     pass
-        os.write(fd, json.dumps(
-            {"pid": os.getpid(), "op": self.op, "ts": time.time()}
-        ).encode())
-        os.close(fd)
-        return self
+        finally:
+            os.unlink(tmp)
 
     def __exit__(self, *exc):
         try:
@@ -201,13 +223,6 @@ def _read_manifest(spark: SparkSession, index_dir: str) -> DataFrame | None:
         return None
 
 
-def _append(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    w = df.write.mode("append")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
 def _overwrite_group(df: DataFrame, path: str, partition_by: list[str]) -> None:
     """Idempotent group write: dynamic partition overwrite replaces
     exactly the partitions present in ``df`` (its group_id), so a resumed
@@ -220,6 +235,81 @@ def _overwrite_group(df: DataFrame, path: str, partition_by: list[str]) -> None:
         df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
     finally:
         spark.conf.set(key, old)
+
+
+def _write_group(index_dir: str, g: int, n_buckets: int, postings: DataFrame,
+                 doc_meta: DataFrame, positions: DataFrame | None) -> None:
+    """Write one segment group's tables (the views
+    :func:`sparktext.build.build_segments` returns) under ``group_id=g``.
+    Every table is a dynamic partition overwrite, so a retry after a
+    crash anywhere before the manifest row replaces the orphans instead
+    of doubling rows. doc_meta goes last."""
+    gid = F.lit(g)
+    if positions is not None:
+        _overwrite_group(
+            positions.withColumn("term_bucket", term_bucket_col(F.col("term"), n_buckets))
+            .withColumn("group_id", gid),
+            os.path.join(index_dir, "positions"), ["group_id", "term_bucket"],
+        )
+    # One postings file per term_bucket (not per segment and bucket): a
+    # term query opens one file per group. sortWithinPartitions(term):
+    # tight parquet row-group min/max on the term column -> row-group
+    # skipping under the pushed term filter at query time (§4.1).
+    _overwrite_group(
+        postings.withColumn("group_id", gid).repartition("term_bucket")
+        .sortWithinPartitions("term", "segment_id", "block_id"),
+        os.path.join(index_dir, "postings"), ["group_id", "term_bucket"],
+    )
+    _overwrite_group(doc_meta.withColumn("group_id", gid),
+                     os.path.join(index_dir, "doc_meta"), ["group_id"])
+
+
+def _write_facet_group(index_dir: str, g: int, n_buckets: int, doc_meta: DataFrame,
+                       facet_expr: str, depth: int | None) -> None:
+    """Encode one group's facet prefixes (build.with_facets) and
+    overwrite just its (group_id, term_bucket) partitions — the same
+    crash-retry contract as the text postings."""
+    fblocks = encode_posting_blocks(
+        facet_posting_rows(doc_meta.drop("group_id"), facet_expr, depth), n_buckets
+    )
+    _overwrite_group(
+        fblocks.withColumn("group_id", F.lit(g))
+        .sortWithinPartitions("term", "segment_id", "block_id"),
+        os.path.join(index_dir, "facet_postings"), ["group_id", "term_bucket"],
+    )
+
+
+def _manifest_row(index_dir: str, g: int, n_docs: int, fp, t0: float,
+                  build_id: str, num_segments: int, num_groups: int,
+                  with_positions: bool) -> None:
+    """Append the row that marks group ``g`` complete: the commit point."""
+    df = SparkSession.active().createDataFrame(
+        [(int(g), int(n_docs), int(fp or 0), int((time.time() - t0) * 1000),
+          build_id, "complete", int(num_segments), int(num_groups),
+          bool(with_positions))],
+        "group_id int, n_docs long, input_fingerprint long, wall_ms long, "
+        "build_id string, status string, num_segments int, num_groups int, "
+        "with_positions boolean",
+    )
+    df.write.mode("append").parquet(os.path.join(index_dir, "_manifest"))
+
+
+def _metrics_row(index_dir: str, stage: str, g: int, rows: int, t0: float,
+                 build_id: str) -> None:
+    df = SparkSession.active().createDataFrame(
+        [(stage, int(g), int(rows), int((time.time() - t0) * 1000), build_id)],
+        "stage string, group_id int, rows long, wall_ms long, build_id string",
+    )
+    df.write.mode("append").parquet(os.path.join(index_dir, "_metrics"))
+
+
+def _write_geometry(index_dir: str, num_segments: int, num_groups: int,
+                    with_positions: bool) -> None:
+    """The resume sidecar: build_persistent_index(resume=True) adopts
+    all three keys."""
+    with open(os.path.join(index_dir, "geometry.json"), "w") as f:
+        json.dump({"num_segments": int(num_segments), "num_groups": int(num_groups),
+                   "with_positions": bool(with_positions)}, f)
 
 
 def build_persistent_index(
@@ -272,13 +362,13 @@ def build_persistent_index(
         num_segments, num_groups = int(row0["num_segments"]), int(row0["num_groups"])
         with_positions = bool(row0["with_positions"])
     os.makedirs(index_dir, exist_ok=True)
-    with open(geometry_path, "w") as f:
-        json.dump({"num_segments": num_segments, "num_groups": num_groups,
-                   "with_positions": with_positions}, f)
+    _write_geometry(index_dir, num_segments, num_groups, with_positions)
 
     _id_caches: list = []
     corpus = assign_doc_ids(corpus, num_segments, _cache_out=_id_caches)
     n_docs = corpus.count()
+    # doc_id // seg_size, not the assignment's range partitions: resume
+    # needs segment boundaries that do not depend on range sampling.
     seg_size = max(1, math.ceil(n_docs / num_segments))
     segs_per_group = max(1, math.ceil(num_segments / num_groups))
     # repartition before the sha projection (see build.py note): heavy
@@ -297,112 +387,18 @@ def build_persistent_index(
             for r in manifest.filter(F.col("status") == "complete").select("group_id").collect()
         }
 
-    all_groups = list(range(num_groups))
-    todo = [g for g in all_groups if g not in done]
-    postings_path = os.path.join(index_dir, "postings")
-    doc_meta_path = os.path.join(index_dir, "doc_meta")
-    metrics_path = os.path.join(index_dir, "_metrics")
-    manifest_path = os.path.join(index_dir, "_manifest")
-
-    from sparktext.fieldnorm import fieldnorm_to_id
-    import numpy as np
-    import pandas as pd
-
-    norm_udf = F.pandas_udf(
-        lambda s: pd.Series(fieldnorm_to_id(s.to_numpy()).astype(np.int32)), "int"
-    )
-
-    positions_path = os.path.join(index_dir, "positions")
-
-    for g in todo:
+    for g in (g for g in range(num_groups) if g not in done):
         t0 = time.time()
-        sub = corpus.filter(F.col("group_id") == g)
-        from sparktext.build import (
-            _build_segment_partition,
-            _FUSED_SCHEMA,
-            _TOKENS_SCHEMA_POS,
-            encode_posting_blocks,
-            term_bucket_col,
+        fused, postings, doc_meta, positions = build_segments(
+            corpus.filter(F.col("group_id") == g).repartition(segs_per_group, "segment_id"),
+            n_buckets, with_positions,
         )
-
-        if with_positions:
-            tokens = (
-                sub.select("doc_id", "segment_id", "content")
-                .repartition(segs_per_group, "segment_id")
-                .mapInPandas(
-                    lambda it: _tokenize_partition(it, with_positions=True),
-                    schema=_TOKENS_SCHEMA_POS,
-                )
-                .persist()
-            )
-            posting_rows = tokens.filter(F.col("kind") == 0).drop("kind")
-            meta_rows = tokens.filter(F.col("kind") == 1).select("doc_id", "doc_len")
-            pos = (
-                posting_rows.select("segment_id", "term", "doc_id", "positions")
-                .withColumn("term_bucket", term_bucket_col(F.col("term"), n_buckets))
-                .withColumn("group_id", F.lit(g))
-            )
-            _overwrite_group(pos, positions_path, ["group_id", "term_bucket"])
-            blocks = (
-                encode_posting_blocks(posting_rows.drop("positions"), n_buckets)
-                .withColumn("group_id", F.lit(g))
-                .sortWithinPartitions("term", "segment_id", "block_id")
-            )
-            cache = tokens
-        else:
-            fused = (
-                sub.select("doc_id", "segment_id", "content")
-                .repartition(segs_per_group, "segment_id")
-                .mapInPandas(_build_segment_partition, schema=_FUSED_SCHEMA)
-                .persist()
-            )
-            meta_rows = fused.filter(F.col("kind") == 1).select("doc_id", "doc_len")
-
-            # sortWithinPartitions(term): tight parquet row-group min/max
-            # on the term column -> row-group skipping under the pushed
-            # term filter at query time (§4.1), on top of term_bucket
-            # file pruning.
-            blocks = (
-                fused.filter(F.col("kind") == 0)
-                .drop("kind", "doc_id", "doc_len")
-                .withColumn("term_bucket", term_bucket_col(F.col("term"), n_buckets))
-                .withColumn("group_id", F.lit(g))
-                .sortWithinPartitions("term", "segment_id", "block_id")
-            )
-            cache = fused
-        _overwrite_group(blocks, postings_path, ["group_id", "term_bucket"])
-
-        dm = (
-            sub.join(meta_rows, "doc_id")
-            .withColumn("norm_id", norm_udf(F.col("doc_len")))
-            .select(
-                "doc_id", "segment_id", "repo", "path", "commit", "lang",
-                "doc_len", "norm_id", "sha", "group_id",
-                *(["n_chars"] if "n_chars" in sub.columns else []),
-            )
-        )
-        _overwrite_group(dm, doc_meta_path, ["group_id"])
-
-        agg = sub.agg(
-            F.count("*").alias("n"), _fp_sum_agg().alias("fp"),
-        ).collect()[0]
-        wall_ms = int((time.time() - t0) * 1000)
-        man_row = spark.createDataFrame(
-            [(int(g), int(agg["n"]), int(agg["fp"] or 0), wall_ms, build_id,
-              "complete", int(num_segments), int(num_groups), bool(with_positions))],
-            "group_id int, n_docs long, input_fingerprint long, wall_ms long, "
-            "build_id string, status string, num_segments int, num_groups int, "
-            "with_positions boolean",
-        )
-        _append(man_row, manifest_path)
-        met = spark.createDataFrame(
-            [
-                ("tokenize+blocks", int(g), int(agg["n"]), wall_ms, build_id),
-            ],
-            "stage string, group_id int, rows long, wall_ms long, build_id string",
-        )
-        _append(met, metrics_path)
-        cache.unpersist()
+        _write_group(index_dir, g, n_buckets, postings, doc_meta, positions)
+        agg = doc_meta.agg(F.count("*").alias("n"), _fp_sum_agg().alias("fp")).collect()[0]
+        _manifest_row(index_dir, g, agg["n"], agg["fp"], t0, build_id,
+                      num_segments, num_groups, with_positions)
+        _metrics_row(index_dir, "tokenize+blocks", g, agg["n"], t0, build_id)
+        fused.unpersist()
 
     # Finalize: term dictionary + stats from what's on disk (covers both
     # fresh and resumed builds uniformly).
@@ -418,12 +414,9 @@ def _finalize(spark: SparkSession, index_dir: str, n_buckets: int,
     """Rebuild term_dict + stats from on-disk block headers (idempotent)."""
     t0 = time.time()
     postings = spark.read.parquet(os.path.join(index_dir, "postings"))
-    term_dict = postings.groupBy("term").agg(
-        F.sum("count").alias("doc_freq"),
-        F.sum("sum_tf").alias("total_tf"),
-        F.max("term_bucket").alias("term_bucket"),
+    term_dict_from_blocks(postings, n_buckets).write.mode("overwrite").parquet(
+        os.path.join(index_dir, "term_dict")
     )
-    term_dict.write.mode("overwrite").parquet(os.path.join(index_dir, "term_dict"))
     doc_meta = spark.read.parquet(os.path.join(index_dir, "doc_meta"))
     srow = doc_meta.agg(F.count("*").alias("n"), F.sum("doc_len").alias("tt")).collect()[0]
     with open(os.path.join(index_dir, "stats.json"), "w") as f:
@@ -431,11 +424,7 @@ def _finalize(spark: SparkSession, index_dir: str, n_buckets: int,
             "num_docs": int(srow["n"]), "total_tokens": int(srow["tt"] or 0),
             "n_buckets": n_buckets, "num_segments": num_segments,
         }, f)
-    met = spark.createDataFrame(
-        [("finalize", -1, int(srow["n"]), int((time.time() - t0) * 1000), build_id)],
-        "stage string, group_id int, rows long, wall_ms long, build_id string",
-    )
-    _append(met, os.path.join(index_dir, "_metrics"))
+    _metrics_row(index_dir, "finalize", -1, srow["n"], t0, build_id)
 
 
 def append_documents(
@@ -503,18 +492,11 @@ def _append_documents_locked(
     force: bool,
     commit_token: str | None,
 ) -> Index:
-    import math
-
-    from sparktext.fieldnorm import fieldnorm_to_id
-    import numpy as np
-    import pandas as pd
-
     with open(os.path.join(index_dir, "stats.json")) as f:
         st = json.load(f)
     n_buckets = st["n_buckets"]
     build_id = commit_token if commit_token is not None else uuid.uuid4().hex[:12]
-    positions_path = os.path.join(index_dir, "positions")
-    has_positions = os.path.exists(positions_path)
+    has_positions = os.path.exists(os.path.join(index_dir, "positions"))
     # Base state comes from the MANIFEST (complete groups only), not from
     # raw doc_meta maxima: a crash between a previous append's data
     # writes and its manifest row leaves orphan group partitions, and
@@ -543,20 +525,11 @@ def _append_documents_locked(
         num_segments = max(4, spark.sparkContext.defaultParallelism)
     corpus = with_sha(new_corpus)
     _id_caches: list = []
-    if "doc_id" in corpus.columns:
-        corpus = corpus.withColumn("doc_id", F.col("doc_id") + F.lit(base_doc))
-    else:
-        corpus = assign_doc_ids(corpus, num_segments, _cache_out=_id_caches).withColumn(
-            "doc_id", F.col("doc_id") + F.lit(base_doc)
-        )
-    n_new = corpus.count()
-    seg_size = max(1, math.ceil(n_new / num_segments))
-    corpus = corpus.withColumn(
-        "segment_id",
-        ((F.col("doc_id") - F.lit(base_doc)) / F.lit(seg_size)).cast("int") + F.lit(base_seg),
-    ).withColumn("group_id", F.lit(g)).persist()
-
-    fp = corpus.agg(_fp_sum_agg().alias("fp")).collect()[0]["fp"]
+    if "doc_id" not in corpus.columns:
+        corpus = assign_doc_ids(corpus, num_segments, _cache_out=_id_caches)
+    corpus = corpus.withColumn("doc_id", F.col("doc_id") + F.lit(base_doc)).persist()
+    agg = corpus.agg(F.count("*").alias("n"), _fp_sum_agg().alias("fp")).collect()[0]
+    n_new, fp = int(agg["n"]), agg["fp"]
     last = (
         manifest0.filter(F.col("status") == "complete")
         .orderBy(F.desc("group_id"))
@@ -591,116 +564,36 @@ def _append_documents_locked(
             "retry: repairing finalize, NOT appending again "
             "(force=True overrides)"
         )
-        _finalize(spark, index_dir, n_buckets, int(last["num_segments"]), build_id)
-        geometry_path = os.path.join(index_dir, "geometry.json")
-        if os.path.exists(geometry_path):
-            with open(geometry_path) as f:
-                geo = json.load(f)
-            geo["num_segments"] = int(last["num_segments"])
-            geo["num_groups"] = int(last["num_groups"])
-            with open(geometry_path, "w") as f:
-                json.dump(geo, f)
-        corpus.unpersist()
-        for c in _id_caches:
-            c.unpersist()
-        return load_index(spark, index_dir)
-
-    t0 = time.time()
-    from sparktext.build import _TOKENS_SCHEMA_POS
-
-    tokens = (
-        corpus.select("doc_id", "segment_id", "content")
-        .repartition(num_segments, "segment_id")
-        .mapInPandas(
-            lambda it: _tokenize_partition(it, with_positions=has_positions),
-            schema=_TOKENS_SCHEMA_POS if has_positions else _TOKENS_SCHEMA,
+        total_segments, num_groups = int(last["num_segments"]), int(last["num_groups"])
+    else:
+        t0 = time.time()
+        seg_size = max(1, math.ceil(n_new / num_segments))
+        segment = ((F.col("doc_id") - F.lit(base_doc)) / F.lit(seg_size)).cast("int")
+        fused, postings, doc_meta, positions = build_segments(
+            corpus.withColumn("segment_id", segment + F.lit(base_seg))
+            .repartition(num_segments, "segment_id"),
+            n_buckets, has_positions,
         )
-        .persist()
-    )
-    posting_rows = tokens.filter(F.col("kind") == 0).drop("kind")
-    meta_rows = tokens.filter(F.col("kind") == 1).select("doc_id", "doc_len")
-    # All group writes use DYNAMIC partition overwrite, not append: a
-    # crash after any data write but before the manifest append leaves
-    # this group's partitions on disk, and the retried append recomputes
-    # the SAME group id (max over doc_meta, which is written last among
-    # the data tables) — overwrite replaces the orphans; plain append
-    # would double every posting row.
-    if has_positions:
-        # Extend the phrase index for the new group exactly like
-        # build_persistent_index does — phrase queries over appended docs
-        # must equal a from-scratch positions build (asserted in tests).
-        pos = (
-            posting_rows.select("segment_id", "term", "doc_id", "positions")
-            .withColumn("term_bucket", term_bucket_col(F.col("term"), n_buckets))
-            .withColumn("group_id", F.lit(g))
-        )
-        _overwrite_group(pos, positions_path, ["group_id", "term_bucket"])
-        posting_rows = posting_rows.drop("positions")
-    blocks = (
-        encode_posting_blocks(posting_rows, n_buckets)
-        .withColumn("group_id", F.lit(g))
-        .sortWithinPartitions("term", "segment_id", "block_id")
-    )
-    _overwrite_group(blocks, os.path.join(index_dir, "postings"), ["group_id", "term_bucket"])
+        # Phrase queries over appended docs must equal a from-scratch
+        # positions build (asserted in tests), so positions extend too.
+        _write_group(index_dir, g, n_buckets, postings, doc_meta, positions)
+        facets_json = os.path.join(index_dir, "facets.json")
+        if os.path.exists(facets_json) and os.path.exists(
+            os.path.join(index_dir, "facet_postings")
+        ):
+            # Maintain the facet field (build.with_facets sidecar).
+            with open(facets_json) as f:
+                fj = json.load(f)
+            _write_facet_group(index_dir, g, n_buckets, doc_meta, fj["expr"],
+                               fj.get("depth"))
+        total_segments, num_groups = st["num_segments"] + num_segments, g + 1
+        _manifest_row(index_dir, g, n_new, fp, t0, build_id, total_segments,
+                      num_groups, has_positions)
+        fused.unpersist()
 
-    norm_udf = F.pandas_udf(
-        lambda s: pd.Series(fieldnorm_to_id(s.to_numpy()).astype(np.int32)), "int"
-    )
-    dm = (
-        corpus.join(meta_rows, "doc_id")
-        .withColumn("norm_id", norm_udf(F.col("doc_len")))
-        .select(
-            "doc_id", "segment_id", "repo", "path", "commit", "lang",
-            "doc_len", "norm_id", "sha", "group_id",
-            *(["n_chars"] if "n_chars" in corpus.columns else []),
-        )
-    )
-    _overwrite_group(dm, os.path.join(index_dir, "doc_meta"), ["group_id"])
-
-    facets_json = os.path.join(index_dir, "facets.json")
-    if os.path.exists(facets_json) and os.path.exists(
-        os.path.join(index_dir, "facet_postings")
-    ):
-        # Maintain the facet field (build.with_facets sidecar): encode
-        # the NEW group's facet prefixes and overwrite just its
-        # (group_id, term_bucket) partitions — same crash-retry contract
-        # as the text postings above.
-        from sparktext.build import encode_posting_blocks as _encode
-        from sparktext.build import facet_posting_rows
-
-        with open(facets_json) as f:
-            fj = json.load(f)
-        frows = facet_posting_rows(dm, fj["expr"], fj.get("depth"))
-        fblocks = _encode(frows.drop("group_id"), n_buckets).withColumn(
-            "group_id", F.lit(g)
-        )
-        _overwrite_group(
-            fblocks.sortWithinPartitions("term", "segment_id", "block_id"),
-            os.path.join(index_dir, "facet_postings"),
-            ["group_id", "term_bucket"],
-        )
-
-    man_row = spark.createDataFrame(
-        [(g, int(n_new), int(fp or 0), int((time.time() - t0) * 1000), build_id,
-          "complete", int(st["num_segments"] + num_segments), int(g + 1),
-          bool(has_positions))],
-        "group_id int, n_docs long, input_fingerprint long, wall_ms long, "
-        "build_id string, status string, num_segments int, num_groups int, "
-        "with_positions boolean",
-    )
-    _append(man_row, os.path.join(index_dir, "_manifest"))
-
-    _finalize(spark, index_dir, n_buckets, st["num_segments"] + num_segments, build_id)
-    geometry_path = os.path.join(index_dir, "geometry.json")
-    if os.path.exists(geometry_path):
-        # Keep the resume sidecar in sync with the appended segment count.
-        with open(geometry_path) as f:
-            geo = json.load(f)
-        geo["num_segments"] = int(st["num_segments"] + num_segments)
-        geo["num_groups"] = int(g + 1)
-        with open(geometry_path, "w") as f:
-            json.dump(geo, f)
-    tokens.unpersist()
+    _finalize(spark, index_dir, n_buckets, total_segments, build_id)
+    # Keep the resume sidecar in sync with the appended segment count.
+    _write_geometry(index_dir, total_segments, num_groups, has_positions)
     corpus.unpersist()
     for c in _id_caches:
         c.unpersist()
@@ -806,64 +699,27 @@ def _compact_index_locked(
     build_id = uuid.uuid4().hex[:12]
 
     os.makedirs(tmp)
-    (merged.postings.withColumn("group_id", F.lit(0))
-        .repartition("term_bucket")
-        .sortWithinPartitions("term", "segment_id", "block_id")
-        .write.partitionBy("group_id", "term_bucket")
-        .parquet(os.path.join(tmp, "postings")))
-    dm = merged.doc_meta.withColumn("group_id", F.lit(0))
-    dm.write.partitionBy("group_id").parquet(os.path.join(tmp, "doc_meta"))
+    _write_group(tmp, 0, idx.n_buckets, merged.postings, merged.doc_meta,
+                 merged.positions)
     merged.term_dict.write.parquet(os.path.join(tmp, "term_dict"))
-    if merged.positions is not None:
-        (merged.positions.withColumn("group_id", F.lit(0))
-            .withColumn("term_bucket", term_bucket_col(F.col("term"), idx.n_buckets))
-            .write.partitionBy("group_id", "term_bucket")
-            .parquet(os.path.join(tmp, "positions")))
     if merged.facet_postings is not None and merged.facet_expr is not None:
-        from sparktext.build import encode_posting_blocks, facet_posting_rows
-
-        fblocks = encode_posting_blocks(
-            facet_posting_rows(
-                merged.doc_meta.drop("group_id"),
-                merged.facet_expr, merged.facet_depth,
-            ),
-            idx.n_buckets,
-        ).withColumn("group_id", F.lit(0))
-        (fblocks.sortWithinPartitions("term", "segment_id", "block_id")
-            .write.partitionBy("group_id", "term_bucket")
-            .parquet(os.path.join(tmp, "facet_postings")))
+        _write_facet_group(tmp, 0, idx.n_buckets, merged.doc_meta,
+                           merged.facet_expr, merged.facet_depth)
         with open(os.path.join(tmp, "facets.json"), "w") as f:
             json.dump({"expr": merged.facet_expr, "depth": merged.facet_depth}, f)
 
-    srow = dm.agg(
-        F.count("*").alias("n"), F.sum("doc_len").alias("tt"),
-        _fp_sum_agg().alias("fp"),
-    ).collect()[0]
+    srow = merged.doc_meta.agg(F.count("*").alias("n"), _fp_sum_agg().alias("fp")).collect()[0]
     with open(os.path.join(tmp, "stats.json"), "w") as f:
         json.dump({
             "num_docs": int(srow["n"]),
             "total_tokens": int(merged.stats.total_tokens),
             "n_buckets": idx.n_buckets, "num_segments": num_segments,
         }, f)
-    with open(os.path.join(tmp, "geometry.json"), "w") as f:
-        # with_positions included: build_persistent_index(resume=True)
-        # adopts this sidecar and reads all three keys
-        json.dump({"num_segments": num_segments, "num_groups": 1,
-                   "with_positions": merged.positions is not None}, f)
-    man = spark.createDataFrame(
-        [(0, int(srow["n"]), int(srow["fp"] or 0),
-          int((time.time() - t0) * 1000), build_id, "complete",
-          num_segments, 1, merged.positions is not None)],
-        "group_id int, n_docs long, input_fingerprint long, wall_ms long, "
-        "build_id string, status string, num_segments int, num_groups int, "
-        "with_positions boolean",
-    )
-    man.write.parquet(os.path.join(tmp, "_manifest"))
-    met = spark.createDataFrame(
-        [("compact", 0, int(srow["n"]), int((time.time() - t0) * 1000), build_id)],
-        "stage string, group_id int, rows long, wall_ms long, build_id string",
-    )
-    met.write.parquet(os.path.join(tmp, "_metrics"))
+    has_positions = merged.positions is not None
+    _write_geometry(tmp, num_segments, 1, has_positions)
+    _manifest_row(tmp, 0, srow["n"], srow["fp"], t0, build_id, num_segments, 1,
+                  has_positions)
+    _metrics_row(tmp, "compact", 0, srow["n"], t0, build_id)
     # Stage the streaming checkpoint into tmp BEFORE the marker: once
     # _COMPACT_DONE exists, tmp may be swapped in by recovery after any
     # crash — it must already be a complete index INCLUDING the

@@ -39,7 +39,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from sparktext import codec
-from sparktext.build import Index, IndexStats, encode_posting_blocks, term_bucket_col
+from sparktext.build import (
+    Index,
+    IndexStats,
+    encode_posting_blocks,
+    facet_posting_rows,
+    term_dict_from_blocks,
+)
 
 
 def merge_segments(
@@ -91,12 +97,7 @@ def merge_segments(
         # Same derivations as a fresh build: headers (128x fewer rows
         # than postings, algebraic sums) for the dictionary, one tiny
         # doc_meta aggregate for the corpus stats.
-        term_dict = (
-            postings.groupBy("term")
-            .agg(F.sum("count").alias("doc_freq"), F.sum("sum_tf").alias("total_tf"))
-            .withColumn("term_bucket", term_bucket_col(F.col("term"), index.n_buckets))
-            .persist()
-        )
+        term_dict = term_dict_from_blocks(postings, index.n_buckets).persist()
         srow = doc_meta.agg(
             F.count("*").alias("n"), F.sum("doc_len").alias("tt")
         ).collect()[0]
@@ -113,8 +114,6 @@ def merge_segments(
     facet_postings = index.facet_postings
     if facet_postings is not None and index.deleted is not None:
         if index.facet_expr is not None:
-            from sparktext.build import facet_posting_rows
-
             facet_postings = encode_posting_blocks(
                 facet_posting_rows(
                     doc_meta.drop("group_id"), index.facet_expr, index.facet_depth

@@ -12,6 +12,20 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def _host_cpus() -> int:
+    """CPUs this process may run on (affinity, not the machine's count)."""
+    return len(os.sched_getaffinity(0))
+
+
+def _host_heap() -> str:
+    """A quarter of MemTotal: local mode runs the executors inside the
+    driver JVM, and the Python workers and other tenants need the rest."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    return f"{max(1024, kb // 1024 // 4)}m"
+
+
 DEFAULT_CONF = {
     # Arrow transfer for every pandas UDF / mapInPandas / applyInPandas.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
@@ -23,10 +37,6 @@ DEFAULT_CONF = {
     # Keep broadcast threshold generous: term dictionaries are small.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.ui.enabled": "false",
-    # local mode = ONE JVM doing executor work: size the heap to the box
-    # (128 GiB here), not to a driver-only footprint — an 8g heap turns
-    # multi-million-doc builds GC-bound at every parallelism level.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
 }
 
 
@@ -38,20 +48,25 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession configured for this engine.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, fallback ``*``)
-    when no active session exists. ``shuffle_partitions`` defaults to the
-    parallelism of the master (local[N] -> N) so small-scale runs don't pay
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, fallback:
+    the CPUs this process may use) when no active session exists.
+    ``shuffle_partitions`` defaults to the parallelism of the master
+    (local[N] -> N, else the host CPU count) so small-scale runs don't pay
     200-partition overhead while cluster runs can raise it.
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or _host_cpus()
         master = f"local[{cpus}]"
     builder = builder.master(master)
     conf = dict(DEFAULT_CONF)
+    # local mode = ONE JVM doing executor work: size the heap to the
+    # host, not to a driver-only footprint — a too-small heap turns
+    # multi-million-doc builds GC-bound at every parallelism level.
+    conf["spark.driver.memory"] = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_heap()
     if shuffle_partitions is None:
         inner = master.split("[")[-1].rstrip("]") if "[" in master else ""
-        shuffle_partitions = int(inner) if inner.isdigit() else 32
+        shuffle_partitions = int(inner) if inner.isdigit() else _host_cpus()
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_conf:
         conf.update(extra_conf)

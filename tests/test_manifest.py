@@ -156,6 +156,34 @@ def test_positions_through_persistent_path(spark, micro_corpus, tmpdir):
     assert idx3.positions is not None
 
 
+@pytest.mark.parametrize("with_positions", [False, True])
+def test_persisted_columns_match_in_memory(spark, micro_corpus, tmpdir, with_positions):
+    """A persisted group (build and append alike) holds exactly the
+    in-memory index's postings and doc_meta columns plus group_id — no
+    all-null carry-over columns, whatever with_positions is."""
+    import os
+
+    from sparktext.build import build_index
+    from sparktext.manifest import append_documents
+
+    mem = build_index(spark, micro_corpus, num_segments=3, with_positions=with_positions)
+    first = micro_corpus.filter(F.col("doc_id") < 6)
+    second = micro_corpus.filter(F.col("doc_id") >= 6).withColumn(
+        "doc_id", F.col("doc_id") - 6
+    )
+    d = os.path.join(str(tmpdir), "idx")
+    build_index(spark, first, num_segments=2, index_dir=d, num_groups=1,
+                with_positions=with_positions)
+    append_documents(spark, d, second, num_segments=2)
+    for table, frame in (("postings", mem.postings), ("doc_meta", mem.doc_meta)):
+        want = sorted(frame.columns + ["group_id"])
+        for g in (0, 1):  # the build's group, then the append's
+            part = spark.read.parquet(os.path.join(d, table, f"group_id={g}"))
+            got = part.columns + ["group_id"]
+            assert sorted(got) == want, (table, g)
+    mem.unpersist()
+
+
 def test_persisted_query_plan_prunes(spark, micro_corpus, tmpdir):
     """§4.1 evidence: a term query against the persisted index must push
     the term filter into the parquet scan (row-group skipping) AND prune
@@ -392,6 +420,41 @@ def test_stale_writer_lock_is_broken(spark, micro_corpus, tmpdir):
     with pytest.warns(UserWarning, match="stale"):
         idx = append_documents(spark, d, second, num_segments=2)
     assert idx.stats.num_docs == 12
+
+
+def test_stale_lock_claim_of_live_lock_backs_out(tmpdir, monkeypatch):
+    """Two waiters see the same dead pid; the winner breaks the stale
+    lock and takes a live one before the loser's claim rename runs. The
+    loser's rename then grabs the LIVE lock: it must put the file back
+    and raise, not break it."""
+    import json as _json
+    import os
+
+    from sparktext import manifest
+    from sparktext.manifest import WriterLockHeld, _writer_lock
+
+    d = os.path.join(str(tmpdir), "idx")
+    path = d + ".writer_lock"
+    with open(path, "w") as f:
+        _json.dump({"pid": 2**22 + 12345, "op": "compact", "ts": 0}, f)
+    live = {"pid": os.getpid(), "op": "append", "ts": 1}
+    real_rename = os.rename
+
+    def racing_rename(src, dst):
+        if src == path:  # the winner swaps in its live lock first
+            os.unlink(path)
+            with open(path, "w") as f:
+                _json.dump(live, f)
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(manifest.os, "rename", racing_rename)
+    with pytest.raises(WriterLockHeld):
+        with _writer_lock(d, "append"):
+            pass
+    monkeypatch.undo()
+    with open(path) as f:
+        assert _json.load(f) == live
+    assert [p for p in os.listdir(str(tmpdir)) if p != "idx.writer_lock"] == []
 
 
 def test_append_skip_warns_and_metadata_change_appends(

@@ -66,6 +66,51 @@ def test_phrase_scores(pos_index):
         assert rows[d] == pytest.approx(expected, abs=1e-9)
 
 
+def _positions_reference(docs):
+    """(doc_id, term) -> token indexes, from the build's own tokenizer."""
+    import pandas as pd
+
+    from sparktext.tokenizer import tokenize_flat
+
+    ids = [d for d, _ in docs]
+    row_idx, toks = tokenize_flat(pd.Series([t for _, t in docs]))
+    ref, seen = {}, {}
+    for i, tok in zip(row_idx, toks):
+        ref.setdefault((ids[i], tok), []).append(seen.get(i, 0))
+        seen[i] = seen.get(i, 0) + 1
+    return ref
+
+
+@pytest.mark.parametrize("case", ["repeated_terms", "non_monotonic_ids", "zero_token_doc"])
+def test_fused_worker_positions(spark, micro_corpus, case):
+    """The fused build worker's positions rows equal token indexes per
+    (doc, term) from the tokenizer: repeated terms (docs 1, 2, 7);
+    caller-supplied doc ids in descending row order (every partition is
+    non-monotonic, so the worker's lexsort must reorder positions with
+    the tf runs); and an appended doc with no tokens at all."""
+    from pyspark.sql import functions as F
+
+    from sparktext.build import build_index
+
+    corpus = micro_corpus
+    if case == "non_monotonic_ids":
+        corpus = corpus.withColumn("doc_id", F.lit(100) - F.col("doc_id"))
+    elif case == "zero_token_doc":
+        extra = spark.createDataFrame(
+            [(12, "r3", "d/0.py", "c12", "py", " !! ", 4)], corpus.schema
+        )
+        corpus = corpus.union(extra)
+    rows = corpus.select("doc_id", "content").collect()
+    idx = build_index(spark, corpus, num_segments=3, with_positions=True)
+    got = {(r["doc_id"], r["term"]): list(r["positions"])
+           for r in idx.positions.collect()}
+    assert got == _positions_reference([(r["doc_id"], r["content"]) for r in rows])
+    assert idx.stats.num_docs == len(rows)
+    if case == "zero_token_doc":
+        assert idx.doc_meta.filter("doc_id = 12").first()["doc_len"] == 0
+    idx.unpersist()
+
+
 def test_phrase_without_positions(micro_index):
     from sparktext.query import phrase_docs
 
