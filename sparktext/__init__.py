@@ -8,8 +8,10 @@ Layout (SURVEY.md §7):
 - :mod:`sparktext.tokenizer`  — A1/A2 vectorized tokenizer pipeline
 - :mod:`sparktext.fieldnorm`  — A7/§4.5 lossy 1-byte fieldnorm quantization
 - :mod:`sparktext.codec`      — A5 docID-delta varint/FOR 128-doc block codec
-- :mod:`sparktext.build`      — A3,A4,A6,A8,A12 index build (segments, term
-  dict, doc meta, manifest/metrics, resume)
+- :mod:`sparktext.build`      — A3,A4,A6,A8 index build (segments, term
+  dict, doc meta)
+- :mod:`sparktext.manifest`   — A12 persisted layout: commit log, resume,
+  append, compaction, vacuum
 - :mod:`sparktext.merge`      — A10/§4.7 segment merge w/ salted repartition
 - :mod:`sparktext.query`      — B1–B7 query AST + parser + matching
 - :mod:`sparktext.score`      — B8 BM25, B10 block-max WAND pruning
@@ -22,7 +24,7 @@ Layout (SURVEY.md §7):
 - :mod:`sparktext.porter2`    — built-in Snowball-English stemmer (A2)
 - :mod:`sparktext.ann`        — similarity search over embedding columns
 - :mod:`sparktext.streaming`  — Structured Streaming ingest sink (micro-
-  batch appends through the crash-safe A12 path; exactly-once)
+  batch appends through the A12 commit log; exactly-once)
 - :mod:`sparktext.multimodal` — binary media columns: magic-byte meta,
   REAL PPM/BMP/PNG + PCM-WAV decode, Arrow-batched featurizers
 - :mod:`sparktext.sources`    — corpus sources (parquet; gated Iceberg)

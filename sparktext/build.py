@@ -525,7 +525,8 @@ def build_index(
 
     In-memory mode (``index_dir=None``): returns an :class:`Index` whose
     DataFrames are persisted (MEMORY_AND_DISK). Persisted mode: writes the
-    A12 layout with manifest/metrics and supports ``resume``.
+    A12 layout, one commit of its log per segment group, and supports
+    ``resume`` (:mod:`sparktext.manifest`).
     """
     if index_dir is not None:
         from sparktext.manifest import build_persistent_index
@@ -585,19 +586,19 @@ def build_index(
                  _build_caches=[fused])
 
 
-def facet_posting_rows(doc_meta: DataFrame, facet_expr: str, depth: int | None) -> DataFrame:
-    """(doc_id, segment_id[, group_id], term=ancestor-prefix, tf=1,
-    doc_len=1) rows for the facet encode — shared by with_facets, the
-    append extension, and the post-purge merge rebuild."""
+def facet_posting_rows(doc_meta: DataFrame, facet_expr, depth: int | None) -> DataFrame:
+    """(doc_id, segment_id, term=ancestor-prefix, tf=1, doc_len=1) rows
+    for the facet encode of ``facet_expr`` (a SQL string or a Column) —
+    shared by with_facets, the persisted groups, and the post-purge
+    merge rebuild."""
     from sparktext.aggs import facet_prefixes_col  # local: import cycle
 
-    keep = ["doc_id", "segment_id"] + (
-        ["group_id"] if "group_id" in doc_meta.columns else []
-    )
+    if isinstance(facet_expr, str):
+        facet_expr = F.expr(facet_expr)
     return (
         doc_meta.select(
-            *keep,
-            F.explode(facet_prefixes_col(F.expr(facet_expr), depth)).alias("term"),
+            "doc_id", "segment_id",
+            F.explode(facet_prefixes_col(facet_expr, depth)).alias("term"),
         )
         .withColumn("tf", F.lit(1))
         .withColumn("doc_len", F.lit(1))
@@ -621,92 +622,41 @@ def with_facets(
     scan over doc_meta, partition-pruned by term_bucket exactly like a
     term query. ``facet_expr`` is a SQL expression STRING over
     ``index.doc_meta`` columns (e.g. ``"concat('/', lang, '/', repo)"``)
-    — a string, not a Column, so the spec can be persisted in a
-    ``facets.json`` sidecar and the facet table MAINTAINED by
-    ``append_documents`` (per-group extension) and ``merge_segments``
-    (post-purge rebuild). A Column is still accepted for ad-hoc
-    in-memory use (it cannot be persisted or maintained).
+    — a string, not a Column, so the spec can be persisted in the
+    index's commit log and the facet table MAINTAINED by
+    ``append_documents`` (per-group extension), ``compact_index`` and
+    ``merge_segments`` (post-purge rebuild). A Column is still accepted
+    for ad-hoc in-memory use (it cannot be persisted or maintained).
 
     Facet terms score constant 1.0 (tantivy multi-term ConstScorer), so
     tf=1 and doc_len=1 placeholders feed the codec; text BM25 statistics
     are untouched — the facet table is separate from ``postings`` and
     never pollutes avgdl/idf.
 
-    ``index_dir``: also write the table (partitioned by
-    (group_id, term_bucket) like postings — group-scoped dynamic
-    overwrite keeps the append extension crash-safe) plus the sidecar;
-    ``load_index`` picks both up on reload.
+    ``index_dir``: persist the field instead, in one commit of the
+    index's log (:func:`sparktext.manifest.write_facets`), and return
+    the index loaded from there; ``load_index`` picks it up on reload.
     """
-    if index_dir is not None and not isinstance(facet_expr, str):
-        raise TypeError(
-            "persisted facets need a SQL-string facet_expr (it is stored "
-            "in facets.json so appends/merges can re-derive the table)"
-        )
-    if isinstance(facet_expr, str):
-        rows = facet_posting_rows(index.doc_meta, facet_expr, depth)
-        expr_attr: str | None = facet_expr
-    else:
-        from sparktext.aggs import facet_prefixes_col  # local: import cycle
-
-        rows = (
-            index.doc_meta.select(
-                "doc_id", "segment_id",
-                F.explode(facet_prefixes_col(facet_expr, depth)).alias("term"),
-            )
-            .withColumn("tf", F.lit(1))
-            .withColumn("doc_len", F.lit(1))
-        )
-        expr_attr = None
-    group_cols = [c for c in ("group_id",) if c in rows.columns]
-    fp = encode_posting_blocks(rows.drop(*group_cols), index.n_buckets)
     if index_dir is not None:
-        import json
-        import os
-        import shutil
+        if not isinstance(facet_expr, str):
+            raise TypeError(
+                "persisted facets need a SQL-string facet_expr (it is stored "
+                "in the commit log so appends and compaction can re-derive "
+                "the table)"
+            )
+        from sparktext.manifest import write_facets
 
-        if group_cols:
-            # re-attach group_id to encoded blocks: every segment belongs
-            # to exactly one group (appends offset segment ids), so a
-            # collected segment->group literal map suffices.
-            seg2grp = (
-                index.doc_meta.select("segment_id", "group_id").distinct().collect()
-            )
-            pairs = []
-            for r in seg2grp:
-                pairs.extend([F.lit(int(r["segment_id"])), F.lit(int(r["group_id"]))])
-            fp = fp.withColumn(
-                "group_id", F.element_at(F.create_map(*pairs), F.col("segment_id"))
-            )
-        else:
-            fp = fp.withColumn("group_id", F.lit(0))
-        # FULL static overwrite, not the dynamic per-partition mode: a
-        # re-run with a DIFFERENT facet_expr must truncate the whole
-        # table — dynamic overwrite would leave term_bucket partitions
-        # that only old-expr terms hashed into, serving a mixed facet
-        # hierarchy. (Appends extend per-group with the dynamic mode;
-        # this initial build is the truncating writer.) The stale
-        # facets.json is removed FIRST so a crash mid-write leaves
-        # table-without-sidecar — the torn state load_index ignores.
-        facets_json = os.path.join(index_dir, "facets.json")
-        if os.path.exists(facets_json):
-            os.remove(facets_json)
-        shutil.rmtree(os.path.join(index_dir, "facet_postings"), ignore_errors=True)
-        (fp.sortWithinPartitions("term", "segment_id", "block_id")
-           .write.mode("overwrite").partitionBy("group_id", "term_bucket")
-           .parquet(os.path.join(index_dir, "facet_postings")))
-        with open(facets_json, "w") as f:
-            json.dump({"expr": facet_expr, "depth": depth}, f)
-        fp = index.doc_meta.sparkSession.read.parquet(
-            os.path.join(index_dir, "facet_postings")
-        )
-    else:
-        fp = fp.persist()
+        return write_facets(index.doc_meta.sparkSession, index_dir, facet_expr, depth)
+    fp = encode_posting_blocks(
+        facet_posting_rows(index.doc_meta, facet_expr, depth), index.n_buckets
+    ).persist()
     return Index(
         doc_meta=index.doc_meta, postings=index.postings,
         term_dict=index.term_dict, stats=index.stats,
         n_buckets=index.n_buckets, positions=index.positions,
         deleted=index.deleted, facet_postings=fp,
-        facet_expr=expr_attr, facet_depth=depth,
+        facet_expr=facet_expr if isinstance(facet_expr, str) else None,
+        facet_depth=depth,
         # facets don't touch the text term dictionary: share the memo
         _tstats=index._tstats, _build_caches=index._build_caches,
     )

@@ -1,48 +1,45 @@
-"""Persistent index layout, checkpoint/resume, lineage + metrics (A12).
+"""Persisted index layout and its commit log (A12).
 
 Layout under ``index_dir``::
 
-    postings/    parquet, partitioned by group_id (checkpoint granularity)
-                 + term_bucket (query-time pruning)
-    doc_meta/    parquet, partitioned by group_id
-    positions/   (with_positions) parquet, partitioned like postings
-    term_dict/   parquet (finalize output, derived from block headers)
-    stats.json   num_docs, total_tokens, n_buckets, num_segments
-    geometry.json  num_segments, num_groups, with_positions (resume sidecar)
-    _manifest/   parquet: one row per completed segment-group
-                 (group_id, n_docs, input_fingerprint, wall_ms, build_id,
-                  status, num_segments, num_groups, with_positions)
-    _metrics/    parquet: per-stage rows (stage, group_id, rows, wall_ms)
+    _log/%020d.json  the commit log: one file per version
+    postings/        parquet, partitioned by group_id + term_bucket
+    doc_meta/        parquet, partitioned by group_id
+    positions/       (with_positions) parquet, partitioned like postings
+    facet_postings/  (with_facets) parquet, partitioned like postings
+    term_dict/       parquet, partitioned by group_id: each group's own
+                     term-dictionary partial
 
-Every segment group — each group of a build and each append — is written
-the same way: :func:`sparktext.build.build_segments` (the one segment
-writer the in-memory build also uses) yields its postings, doc_meta and
-positions, :func:`_write_group` writes them, and a manifest row marks
-the group complete. Each table holds exactly the in-memory index's
-columns plus ``group_id``.
+A *group* is what one writer adds in one commit: a segment group of a
+build, an append batch, or a compaction's output. :func:`_write_group`
+writes each the same way: postings, doc_meta and positions (from
+:func:`sparktext.build.build_segments`, or from a merge), the group's
+term-dictionary partial and, when the index has a facet field, its facet
+postings. The commit records the group's ``n_docs``, ``total_tokens``,
+content fingerprint (lineage: an order-insensitive hash of its docs'
+sha and metadata) and ``wall_ms``. :func:`load_index` sums the partials
+and the counts, the way tantivy sums per-segment ``doc_freq``, so no
+writer ever re-reads another group's data.
 
-Resumability (BASELINE.json north_rule "resumable from checkpoint with
-per-partition lineage + metrics"): the corpus is split into
-``num_groups`` contiguous segment-groups. A re-run with ``resume=True``
-skips the groups the manifest marks complete, then re-finalizes the
-(cheap, vocabulary-sized) term dictionary from all block headers.
-``input_fingerprint`` is the order-insensitive sum of xxhash64 over each
-doc's sha and metadata — lineage evidence that a resumed build saw the
-same input rows (the per-row sha256 itself lives in doc_meta,
-satisfying the content-sha invariant).
+The log follows Delta Lake (VLDB'20). Commit N is ``_log/%020d.json``,
+created complete or not at all: it is written to a private temp file,
+then ``link(2)``-ed to its name, which fails if the name exists. That
+link is the only commit point. A commit lists the data files it adds and
+removes and carries metadata: the build geometry (commit 0), the facet
+spec, the stats of the groups it adds, the groups it drops, a
+``txn(app_id, version)`` for exactly-once callers, and the doc, segment
+and group id high-water marks. Readers replay the log and read only live
+files, as an explicit file list, so:
 
-Crash-safety contract:
-
-- group data is written with DYNAMIC partition overwrite keyed on
-  ``group_id``: a crash between a group's data write and its manifest
-  append leaves orphan files that the resumed run simply overwrites —
-  no duplicate rows can survive a resume;
-- a fresh build REFUSES a non-empty ``index_dir`` (re-running with
-  ``resume=False`` used to double-append everything silently);
-- ``geometry.json`` is written before the first group and a resume
-  ADOPTS it (callers resuming at different parallelism used to silently
-  skip or duplicate docs);
-- appends and compaction take a single-writer lock beside the index.
+- a crashed writer leaves only files no commit references; :func:`vacuum`
+  deletes them;
+- a resumed build adopts the geometry of commit 0 and builds only the
+  groups the log lacks;
+- compaction is one commit that removes exactly the files it read, and
+  the directory is never renamed;
+- concurrent writers race for the next version without a lock: the loser
+  deletes its own files and redoes its work against the new snapshot,
+  with new doc, segment and group ids.
 """
 
 from __future__ import annotations
@@ -50,8 +47,12 @@ from __future__ import annotations
 import json
 import math
 import os
+import re
+import shutil
 import time
 import uuid
+from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -69,114 +70,125 @@ from sparktext.build import (
     with_sha,
 )
 
+_LOG = "_log"
+_COMMIT_NAME = re.compile(r"\d{20}\.json")
+#: streaming-ingest checkpoint directory: Spark's state, not index data
+STREAM_CHECKPOINT = "_stream_checkpoint"
+#: commit races one operation may lose before it gives up
+_MAX_ATTEMPTS = 10
 
-class WriterLockHeld(RuntimeError):
-    """Another writer (append/compact/stream batch) holds the index's
-    single-writer lock. Retry after it finishes — concurrent writers
-    racing compaction's directory swap can land data in a directory
-    about to be deleted."""
+
+@dataclass
+class Snapshot:
+    """The index as of one log version (-1: nothing committed yet)."""
+
+    version: int = -1
+    geometry: dict | None = None
+    #: live data files, relative to index_dir
+    files: set = field(default_factory=set)
+    #: group_id -> the commit's stats for every live group
+    groups: dict = field(default_factory=dict)
+    #: build groups ever committed (compaction may have merged them since)
+    built: set = field(default_factory=set)
+    facets: dict | None = None
+    #: app_id -> highest committed txn version
+    txns: dict = field(default_factory=dict)
+    #: first unused doc, segment and group id
+    next: dict = field(default_factory=lambda: {"doc": 0, "segment": 0, "group": 0})
 
 
-def _lock_pid(path: str):
-    """The pid recorded in a writer lock file (None if unreadable)."""
+def snapshot(index_dir: str) -> Snapshot:
+    """Replay ``index_dir``'s commit log up to its latest version."""
+    snap = Snapshot()
+    log = os.path.join(index_dir, _LOG)
+    names = sorted(os.listdir(log)) if os.path.isdir(log) else []
+    for name in filter(_COMMIT_NAME.fullmatch, names):
+        with open(os.path.join(log, name)) as f:
+            c = json.load(f)
+        snap.version = int(name[:20])
+        snap.geometry = snap.geometry or c.get("geometry")
+        snap.files.difference_update(c.get("remove", []))
+        snap.files.update(c.get("add", []))
+        for g in c.get("drop_groups", []):
+            del snap.groups[g]
+        for s in c.get("groups", []):
+            snap.groups[s["group_id"]] = s
+            if c["op"] == "build":
+                snap.built.add(s["group_id"])
+        snap.facets = c.get("facets", snap.facets)
+        if "txn" in c:
+            app, v = c["txn"]["app_id"], c["txn"]["version"]
+            snap.txns[app] = max(v, snap.txns.get(app, v))
+        for k, v in c.get("next", {}).items():
+            snap.next[k] = max(v, snap.next[k])
+    return snap
+
+
+def _commit(index_dir: str, version: int, actions: dict) -> bool:
+    """Create commit ``version`` complete, or not at all. False when
+    another writer created it first."""
+    log = os.path.join(index_dir, _LOG)
+    os.makedirs(log, exist_ok=True)
+    tmp = os.path.join(log, f".{uuid.uuid4().hex}.tmp")
+    with open(tmp, "w") as f:
+        json.dump(actions, f)
+        f.flush()
+        os.fsync(f.fileno())
     try:
-        with open(path) as f:
-            return json.load(f).get("pid")
-    except (OSError, ValueError):
-        return None
-
-
-def _pid_alive(pid) -> bool:
-    return pid is not None and os.path.exists(f"/proc/{pid}")
-
-
-class _writer_lock:
-    """Single-writer guard shared by :func:`append_documents` and
-    :func:`compact_index` (and, through append, every streaming
-    micro-batch): a JSON lock file BESIDE the index directory — it must
-    survive compaction's renames of the directory itself — created
-    complete by ``link(2)``-ing a written temp file to the lock path
-    (fails if the path exists). A live holder raises
-    :class:`WriterLockHeld` (fail-fast, callers retry after the swap);
-    a stale lock whose pid is dead is broken with a warning. This
-    enforces the contract the compaction swap protocol assumes: no
-    append may land between ``base -> old`` and ``tmp -> base`` (it
-    would write into a directory that is about to be rmtree'd)."""
-
-    def __init__(self, index_dir: str, op: str):
-        self.path = index_dir.rstrip("/") + ".writer_lock"
-        self.op = op
-
-    def __enter__(self):
-        import warnings
-
-        # The lock is born complete: write a private temp file, then
-        # link(2) it to the lock path — link fails if the path exists, so
-        # no reader ever sees an empty lock file (pid=None).
-        tmp = f"{self.path}.{os.getpid()}.{uuid.uuid4().hex[:8]}.tmp"
-        with open(tmp, "w") as f:
-            json.dump({"pid": os.getpid(), "op": self.op, "ts": time.time()}, f)
-        try:
-            while True:
-                try:
-                    os.link(tmp, self.path)
-                    return self
-                except FileExistsError:
-                    pass
-                pid = _lock_pid(self.path)
-                if _pid_alive(pid):
-                    raise WriterLockHeld(
-                        f"index writer lock {self.path!r} held by live "
-                        f"pid {pid}; retry after the current writer "
-                        f"(append/compact) finishes"
-                    )
-                # Atomic CLAIM before breaking: rename the stale file to a
-                # per-pid name — rename(2) is atomic, so exactly ONE waiter
-                # wins a given file; a loser's rename raises and it loops
-                # back to the create.
-                claim = f"{self.path}.stale.{os.getpid()}"
-                try:
-                    os.rename(self.path, claim)
-                except FileNotFoundError:
-                    continue  # another waiter claimed it first
-                # Between reading the dead pid and the rename, another
-                # waiter may have broken that lock and taken a fresh one:
-                # then this rename claimed a LIVE lock. Re-read what was
-                # claimed; anything but the dead holder goes back.
-                got = _lock_pid(claim)
-                if got != pid or _pid_alive(got):
-                    os.rename(claim, self.path)
-                    raise WriterLockHeld(
-                        f"index writer lock {self.path!r} was taken by pid "
-                        f"{got} while breaking a stale lock; retry"
-                    )
-                warnings.warn(
-                    f"breaking stale index writer lock {self.path!r} "
-                    f"(holder pid {pid} is dead)"
-                )
-                try:
-                    os.unlink(claim)
-                except OSError:
-                    pass
-        finally:
-            os.unlink(tmp)
-
-    def __exit__(self, *exc):
-        try:
-            os.unlink(self.path)
-        except OSError:
-            pass
+        os.link(tmp, os.path.join(log, f"{version:020d}.json"))
+        return True
+    except FileExistsError:
         return False
+    finally:
+        os.unlink(tmp)
+
+
+def _transact(index_dir: str, attempt) -> None:
+    """Optimistic concurrency: ``attempt(snapshot)`` writes one
+    operation's files against the latest snapshot and returns its commit
+    (None: nothing to commit). When another writer takes the version
+    first, the attempt's files are deleted (no commit references them)
+    and it runs again against the new snapshot."""
+    for _ in range(_MAX_ATTEMPTS):
+        snap = snapshot(index_dir)
+        actions = attempt(snap)
+        if actions is None or _commit(index_dir, snap.version + 1, actions):
+            return
+        for p in actions.get("add", []):
+            os.remove(os.path.join(index_dir, p))
+    raise RuntimeError(f"{index_dir!r}: lost {_MAX_ATTEMPTS} commit races in a row")
+
+
+def _stage(df: DataFrame, staging: str, table: str, partition_by: list[str]) -> None:
+    """Write one table of an attempt into its private staging directory:
+    Spark's output commit cannot share a directory with another writer."""
+    df.write.mode("append").partitionBy(*partition_by).parquet(os.path.join(staging, table))
+
+
+def _publish(index_dir: str, staging: str) -> list[str]:
+    """Move the staged parquet files into their table directories and
+    return their paths relative to ``index_dir``. Spark names each file
+    after its write job, so no other writer's file is ever replaced."""
+    added = []
+    for root, _, names in os.walk(staging):
+        for n in names:
+            if n.endswith(".parquet"):
+                rel = os.path.relpath(os.path.join(root, n), staging)
+                os.makedirs(os.path.join(index_dir, os.path.dirname(rel)), exist_ok=True)
+                os.rename(os.path.join(root, n), os.path.join(index_dir, rel))
+                added.append(rel)
+    shutil.rmtree(staging)
+    return sorted(added)
+
+
+def _staging_dir(index_dir: str) -> str:
+    return os.path.join(index_dir, "_staging", uuid.uuid4().hex)
 
 
 def _fp_sum_agg():
-    """Order-insensitive input fingerprint aggregate: per-row xxhash64
-    over the content sha AND the metadata columns, summed in unbounded
-    decimal (ANSI-safe) and folded to a long. Metadata is folded in
-    because the fingerprint gates the append crash-retry skip: sha
-    alone (= sha256(content)) could not tell a crash replay from a new
-    batch carrying identical content under DIFFERENT repo/path/commit
-    metadata — that batch's metadata would silently never be indexed."""
+    """Order-insensitive content fingerprint (lineage): per-row xxhash64
+    over the sha and the metadata columns, summed in unbounded decimal
+    (ANSI-safe) and folded to a long."""
     return F.pmod(
         F.sum(
             F.xxhash64("sha", "repo", "path", "commit", "lang")
@@ -186,130 +198,62 @@ def _fp_sum_agg():
     ).cast("long")
 
 
-def _recover_torn_swap(base: str) -> None:
-    """Complete (or roll back) a compaction swap a crash tore in half.
-    MUST be called holding the writer lock. Crash between the two
-    renames: the live dir is missing but tmp carries ``_COMPACT_DONE``
-    — finish the swap (tmp is a complete index incl. the staged
-    streaming checkpoint). Crash before the first rename completed the
-    second: the old dir alone remains — restore it."""
-    if os.path.exists(base):
-        return
-    tmp, old = base + ".compact_tmp", base + ".compact_old"
-    if os.path.exists(os.path.join(tmp, "_COMPACT_DONE")):
-        os.rename(tmp, base)
-    elif os.path.exists(old):
-        os.rename(old, base)  # pre-rename crash left the old dir
-    else:
-        raise ValueError(f"{base!r} holds no index")
-
-
-def _salvage_stream_checkpoint(src_dir: str, dst_dir: str) -> None:
-    """Move ``src_dir``'s streaming-ingest checkpoint into ``dst_dir``
-    unless one is already there — exactly-once STATE, not index data;
-    every path that deletes a superseded index directory must salvage
-    it first or the next stream_ingest replays the whole source."""
-    s = os.path.join(src_dir, "_stream_checkpoint")
-    d = os.path.join(dst_dir, "_stream_checkpoint")
-    if os.path.exists(s) and not os.path.exists(d):
-        os.rename(s, d)
-
-
-def _read_manifest(spark: SparkSession, index_dir: str) -> DataFrame | None:
-    path = os.path.join(index_dir, "_manifest")
-    try:
-        return spark.read.parquet(path)
-    except Exception:
-        return None
-
-
-def _overwrite_group(df: DataFrame, path: str, partition_by: list[str]) -> None:
-    """Idempotent group write: dynamic partition overwrite replaces
-    exactly the partitions present in ``df`` (its group_id), so a resumed
-    group REPLACES any partial files a crashed run left behind."""
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    old = spark.conf.get(key, "static")
-    spark.conf.set(key, "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-    finally:
-        spark.conf.set(key, old)
+def _stage_facets(staging: str, g: int, doc_meta: DataFrame, facets: dict,
+                  n_buckets: int) -> None:
+    """Encode one group's facet prefixes (build.with_facets) into its
+    (group_id, term_bucket) partitions."""
+    blocks = encode_posting_blocks(
+        facet_posting_rows(doc_meta, facets["expr"], facets["depth"]), n_buckets
+    )
+    _stage(
+        blocks.withColumn("group_id", F.lit(g))
+        .sortWithinPartitions("term", "segment_id", "block_id"),
+        staging, "facet_postings", ["group_id", "term_bucket"],
+    )
 
 
 def _write_group(index_dir: str, g: int, n_buckets: int, postings: DataFrame,
-                 doc_meta: DataFrame, positions: DataFrame | None) -> None:
-    """Write one segment group's tables (the views
-    :func:`sparktext.build.build_segments` returns) under ``group_id=g``.
-    Every table is a dynamic partition overwrite, so a retry after a
-    crash anywhere before the manifest row replaces the orphans instead
-    of doubling rows. doc_meta goes last."""
+                 doc_meta: DataFrame, positions: DataFrame | None,
+                 facets: dict | None, t0: float) -> dict:
+    """Stage group ``g``'s tables, its term-dictionary partial and (when
+    the index has a facet field) its facet postings, then publish them.
+    Returns the group's commit: the files it adds, its stats and the id
+    high-water marks of its docs and segments."""
+    staging = _staging_dir(index_dir)
     gid = F.lit(g)
     if positions is not None:
-        _overwrite_group(
+        _stage(
             positions.withColumn("term_bucket", term_bucket_col(F.col("term"), n_buckets))
             .withColumn("group_id", gid),
-            os.path.join(index_dir, "positions"), ["group_id", "term_bucket"],
+            staging, "positions", ["group_id", "term_bucket"],
         )
     # One postings file per term_bucket (not per segment and bucket): a
     # term query opens one file per group. sortWithinPartitions(term):
     # tight parquet row-group min/max on the term column -> row-group
     # skipping under the pushed term filter at query time (§4.1).
-    _overwrite_group(
+    _stage(
         postings.withColumn("group_id", gid).repartition("term_bucket")
         .sortWithinPartitions("term", "segment_id", "block_id"),
-        os.path.join(index_dir, "postings"), ["group_id", "term_bucket"],
+        staging, "postings", ["group_id", "term_bucket"],
     )
-    _overwrite_group(doc_meta.withColumn("group_id", gid),
-                     os.path.join(index_dir, "doc_meta"), ["group_id"])
-
-
-def _write_facet_group(index_dir: str, g: int, n_buckets: int, doc_meta: DataFrame,
-                       facet_expr: str, depth: int | None) -> None:
-    """Encode one group's facet prefixes (build.with_facets) and
-    overwrite just its (group_id, term_bucket) partitions — the same
-    crash-retry contract as the text postings."""
-    fblocks = encode_posting_blocks(
-        facet_posting_rows(doc_meta.drop("group_id"), facet_expr, depth), n_buckets
-    )
-    _overwrite_group(
-        fblocks.withColumn("group_id", F.lit(g))
-        .sortWithinPartitions("term", "segment_id", "block_id"),
-        os.path.join(index_dir, "facet_postings"), ["group_id", "term_bucket"],
-    )
-
-
-def _manifest_row(index_dir: str, g: int, n_docs: int, fp, t0: float,
-                  build_id: str, num_segments: int, num_groups: int,
-                  with_positions: bool) -> None:
-    """Append the row that marks group ``g`` complete: the commit point."""
-    df = SparkSession.active().createDataFrame(
-        [(int(g), int(n_docs), int(fp or 0), int((time.time() - t0) * 1000),
-          build_id, "complete", int(num_segments), int(num_groups),
-          bool(with_positions))],
-        "group_id int, n_docs long, input_fingerprint long, wall_ms long, "
-        "build_id string, status string, num_segments int, num_groups int, "
-        "with_positions boolean",
-    )
-    df.write.mode("append").parquet(os.path.join(index_dir, "_manifest"))
-
-
-def _metrics_row(index_dir: str, stage: str, g: int, rows: int, t0: float,
-                 build_id: str) -> None:
-    df = SparkSession.active().createDataFrame(
-        [(stage, int(g), int(rows), int((time.time() - t0) * 1000), build_id)],
-        "stage string, group_id int, rows long, wall_ms long, build_id string",
-    )
-    df.write.mode("append").parquet(os.path.join(index_dir, "_metrics"))
-
-
-def _write_geometry(index_dir: str, num_segments: int, num_groups: int,
-                    with_positions: bool) -> None:
-    """The resume sidecar: build_persistent_index(resume=True) adopts
-    all three keys."""
-    with open(os.path.join(index_dir, "geometry.json"), "w") as f:
-        json.dump({"num_segments": int(num_segments), "num_groups": int(num_groups),
-                   "with_positions": bool(with_positions)}, f)
+    _stage(term_dict_from_blocks(postings, n_buckets).withColumn("group_id", gid),
+           staging, "term_dict", ["group_id"])
+    if facets is not None:
+        _stage_facets(staging, g, doc_meta, facets, n_buckets)
+    _stage(doc_meta.withColumn("group_id", gid), staging, "doc_meta", ["group_id"])
+    s = doc_meta.agg(
+        F.count("*").alias("n"), F.sum("doc_len").alias("tt"), _fp_sum_agg().alias("fp"),
+        F.coalesce(F.max("doc_id") + 1, F.lit(0)).alias("doc"),
+        F.coalesce(F.max("segment_id") + 1, F.lit(0)).alias("segment"),
+    ).collect()[0]
+    return {
+        "add": _publish(index_dir, staging),
+        "groups": [{
+            "group_id": g, "n_docs": int(s["n"]), "total_tokens": int(s["tt"] or 0),
+            "fingerprint": int(s["fp"] or 0), "wall_ms": int((time.time() - t0) * 1000),
+        }],
+        "next": {"doc": int(s["doc"]), "segment": int(s["segment"]), "group": g + 1},
+    }
 
 
 def build_persistent_index(
@@ -322,109 +266,81 @@ def build_persistent_index(
     num_groups: int = 4,
     with_positions: bool = False,
 ) -> Index:
-    """Checkpointed build: per-group postings/doc_meta writes + manifest."""
-    if num_segments is None:
-        num_segments = max(4, spark.sparkContext.defaultParallelism)
-    build_id = uuid.uuid4().hex[:12]
+    """Checkpointed build: the corpus is split into ``num_groups``
+    contiguous segment groups, one commit each. ``resume=True`` adopts
+    the geometry of commit 0 (resuming at a different parallelism would
+    re-derive different segment and group boundaries and skip or
+    duplicate docs) and builds only the groups the log lacks."""
+    snap = snapshot(index_dir)
+    if snap.version >= 0:
+        if not resume:
+            raise ValueError(
+                f"index_dir {index_dir!r} already holds an index; pass "
+                "resume=True to continue an interrupted build, or point at an "
+                "empty directory"
+            )
+        geometry = snap.geometry
+    else:
+        if num_segments is None:
+            num_segments = max(4, spark.sparkContext.defaultParallelism)
+        geometry = {"num_segments": num_segments, "num_groups": num_groups,
+                    "with_positions": with_positions, "n_buckets": n_buckets}
+    todo = [g for g in range(geometry["num_groups"]) if g not in snap.built]
+    if not todo:
+        return load_index(spark, index_dir)
 
-    prior = _read_manifest(spark, index_dir)
-    if not resume and (
-        prior is not None or os.path.exists(os.path.join(index_dir, "postings"))
-    ):
-        raise ValueError(
-            f"index_dir {index_dir!r} already holds an index; pass "
-            "resume=True to continue an interrupted build, or point at an "
-            "empty directory (re-running a fresh build here would "
-            "double-write every row)"
-        )
-    geometry_path = os.path.join(index_dir, "geometry.json")
-    if resume and os.path.exists(geometry_path):
-        # Adopt the recorded build geometry: resuming at a different
-        # parallelism would re-derive different segment/group boundaries
-        # and silently skip or duplicate docs. The sidecar is written
-        # BEFORE the first group write, so it exists even when the build
-        # crashed mid-first-group (no manifest row yet) — without it,
-        # orphan partitions from the crashed geometry could survive
-        # _overwrite_group's partition-scoped replacement and load as
-        # duplicate postings.
-        with open(geometry_path) as f:
-            geo = json.load(f)
-        num_segments, num_groups = int(geo["num_segments"]), int(geo["num_groups"])
-        with_positions = bool(geo["with_positions"])
-    elif resume and prior is not None:
-        # Pre-sidecar index: fall back to the manifest row.
-        row0 = (
-            prior.select("num_segments", "num_groups", "with_positions")
-            .orderBy(F.desc("num_segments"))
-            .limit(1)
-            .collect()[0]
-        )
-        num_segments, num_groups = int(row0["num_segments"]), int(row0["num_groups"])
-        with_positions = bool(row0["with_positions"])
-    os.makedirs(index_dir, exist_ok=True)
-    _write_geometry(index_dir, num_segments, num_groups, with_positions)
-
-    _id_caches: list = []
-    corpus = assign_doc_ids(corpus, num_segments, _cache_out=_id_caches)
-    n_docs = corpus.count()
+    num_segments = geometry["num_segments"]
+    id_caches: list = []
+    corpus = assign_doc_ids(corpus, num_segments, _cache_out=id_caches)
+    srow = corpus.agg(F.count("*").alias("n"), F.max("doc_id").alias("maxd")).collect()[0]
     # doc_id // seg_size, not the assignment's range partitions: resume
     # needs segment boundaries that do not depend on range sampling.
-    seg_size = max(1, math.ceil(n_docs / num_segments))
-    segs_per_group = max(1, math.ceil(num_segments / num_groups))
-    # repartition before the sha projection (see build.py note): heavy
-    # per-row prep must run post-exchange, not on the input partitioning
-    corpus = with_sha(
+    seg_size = max(1, math.ceil(srow["n"] / num_segments))
+    segs_per_group = max(1, math.ceil(num_segments / geometry["num_groups"]))
+    corpus = (
         corpus.withColumn("segment_id", (F.col("doc_id") / F.lit(seg_size)).cast("int"))
         .withColumn("group_id", (F.col("segment_id") / F.lit(segs_per_group)).cast("int"))
-        .repartition(num_segments, "segment_id")
-    ).persist()
-
-    done: set[int] = set()
-    manifest = _read_manifest(spark, index_dir) if resume else None
-    if manifest is not None:
-        done = {
-            r["group_id"]
-            for r in manifest.filter(F.col("status") == "complete").select("group_id").collect()
-        }
-
-    for g in (g for g in range(num_groups) if g not in done):
-        t0 = time.time()
-        fused, postings, doc_meta, positions = build_segments(
-            corpus.filter(F.col("group_id") == g).repartition(segs_per_group, "segment_id"),
-            n_buckets, with_positions,
-        )
-        _write_group(index_dir, g, n_buckets, postings, doc_meta, positions)
-        agg = doc_meta.agg(F.count("*").alias("n"), _fp_sum_agg().alias("fp")).collect()[0]
-        _manifest_row(index_dir, g, agg["n"], agg["fp"], t0, build_id,
-                      num_segments, num_groups, with_positions)
-        _metrics_row(index_dir, "tokenize+blocks", g, agg["n"], t0, build_id)
-        fused.unpersist()
-
-    # Finalize: term dictionary + stats from what's on disk (covers both
-    # fresh and resumed builds uniformly).
-    _finalize(spark, index_dir, n_buckets, num_segments, build_id)
-    corpus.unpersist()
-    for c in _id_caches:
-        c.unpersist()
+        .persist()
+    )
+    # The build reserves its whole id range up front, so an append that
+    # lands before an interrupted build resumes cannot take its ids.
+    reserve = {"doc": int(srow["maxd"] or 0) + 1, "segment": num_segments,
+               "group": geometry["num_groups"]}
+    try:
+        for g in todo:
+            _transact(index_dir, partial(_build_group, index_dir, corpus, geometry,
+                                         segs_per_group, reserve, g))
+    finally:
+        corpus.unpersist()
+        for c in id_caches:
+            c.unpersist()
     return load_index(spark, index_dir)
 
 
-def _finalize(spark: SparkSession, index_dir: str, n_buckets: int,
-              num_segments: int, build_id: str) -> None:
-    """Rebuild term_dict + stats from on-disk block headers (idempotent)."""
+def _build_group(index_dir: str, corpus: DataFrame, geometry: dict, segs_per_group: int,
+                 reserve: dict, g: int, snap: Snapshot) -> dict | None:
+    """One build group's attempt (see :func:`_transact`)."""
+    if g in snap.built:
+        return None
+    if snap.geometry not in (None, geometry):
+        raise ValueError(f"{index_dir!r}: another build committed a different geometry")
     t0 = time.time()
-    postings = spark.read.parquet(os.path.join(index_dir, "postings"))
-    term_dict_from_blocks(postings, n_buckets).write.mode("overwrite").parquet(
-        os.path.join(index_dir, "term_dict")
+    n_buckets = geometry["n_buckets"]
+    # One exchange per group; the sha projection runs after it, not on
+    # the input partitioning.
+    fused, postings, doc_meta, positions = build_segments(
+        with_sha(corpus.filter(F.col("group_id") == g)
+                 .repartition(segs_per_group, "segment_id")),
+        n_buckets, geometry["with_positions"],
     )
-    doc_meta = spark.read.parquet(os.path.join(index_dir, "doc_meta"))
-    srow = doc_meta.agg(F.count("*").alias("n"), F.sum("doc_len").alias("tt")).collect()[0]
-    with open(os.path.join(index_dir, "stats.json"), "w") as f:
-        json.dump({
-            "num_docs": int(srow["n"]), "total_tokens": int(srow["tt"] or 0),
-            "n_buckets": n_buckets, "num_segments": num_segments,
-        }, f)
-    _metrics_row(index_dir, "finalize", -1, srow["n"], t0, build_id)
+    actions = _write_group(index_dir, g, n_buckets, postings, doc_meta, positions,
+                           snap.facets, t0)
+    fused.unpersist()
+    actions["op"] = "build"
+    actions["next"] = {k: max(v, reserve[k]) for k, v in actions["next"].items()}
+    if snap.version < 0:
+        actions["geometry"] = geometry
+    return actions
 
 
 def append_documents(
@@ -432,326 +348,179 @@ def append_documents(
     index_dir: str,
     new_corpus: DataFrame,
     num_segments: int | None = None,
-    force: bool = False,
-    commit_token: str | None = None,
+    txn: tuple[str, int] | None = None,
 ) -> Index:
-    """Incremental commit (tantivy ``add_document``+``commit`` ≈ appending
-    segments): index new docs as FRESH segments after the current ones,
-    append postings/doc_meta/manifest, re-finalize the (vocabulary-sized)
-    term dictionary and stats. Existing segment files are never rewritten;
-    results equal a from-scratch build over the union corpus because BM25
-    reads only global stats + per-doc norms (asserted in tests). Run
-    :func:`sparktext.merge.merge_segments` afterwards to compact.
+    """Incremental commit (tantivy ``add_document`` + ``commit`` ≈
+    appending segments): index ``new_corpus`` as one new group of fresh
+    segments after the current ones, in one commit. No existing file is
+    rewritten or read: the group carries its own term-dictionary partial
+    and counts, so an append costs what its batch costs. Results equal a
+    from-scratch build over the union corpus because BM25 reads only
+    global stats + per-doc norms (asserted in tests). Run
+    :func:`compact_index` to compact.
 
-    Crash-safety: re-running the append after a crash repairs the index
-    in BOTH crash windows (asserted in tests):
+    ``txn=(app_id, version)`` makes retries exactly-once: the batch is
+    skipped when the log already holds a txn of ``app_id`` at
+    ``version`` or later (a streaming sink passes its batch id). Without
+    a txn every call appends. A crash before the commit leaves only
+    unreferenced files, so a plain retry is safe then; only a retry
+    after a commit the caller never saw needs the txn.
 
-    - crash BEFORE the manifest commit: group ids and base offsets derive
-      from MANIFEST-complete groups and every data write is a dynamic
-      partition overwrite, so the retry recomputes the SAME group id and
-      replaces the orphan partitions;
-    - crash AFTER the manifest commit but before ``_finalize`` (the
-      group's data + manifest row are durable, term_dict/stats are
-      stale): the retry detects that the new corpus' content fingerprint
-      and row count equal the LAST complete group's and runs the
-      (idempotent) finalize repair instead of appending the same docs
-      again under a new group id.
-
-    The bare fingerprint check means appending the exact same corpus
-    twice in a row is read as a crashed retry; pass ``force=True`` for
-    the rare intentional double-append, or — better — a ``commit_token``
-    (any caller-stable string identifying THIS commit attempt, e.g. a
-    streaming batch id): the skip then fires only when BOTH the content
-    fingerprint AND the token match the last complete group, so a
-    legitimately distinct batch that happens to carry identical content
-    (a re-exported snapshot) is still appended, while a replay of the
-    same attempt is still repaired. The token is recorded in the
-    manifest row's ``build_id`` column. An index left un-retried after a
-    crashed append should not be served: either its orphans carry no
-    manifest row or its term_dict predates the last group.
-
-    Concurrency: appends take the index's single-writer lock; a live
-    :func:`compact_index` (or another append) raises
-    :class:`WriterLockHeld` — fail fast, retry after the swap."""
-    with _writer_lock(index_dir, "append"):
-        # A crash mid-compaction-swap leaves the live dir missing with a
-        # complete tmp (or old) beside it; finish that swap here rather
-        # than failing on the missing directory — the batch then appends
-        # onto the recovered index, losing nothing.
-        _recover_torn_swap(index_dir.rstrip("/"))
-        return _append_documents_locked(
-            spark, index_dir, new_corpus, num_segments, force, commit_token
-        )
-
-
-def _append_documents_locked(
-    spark: SparkSession,
-    index_dir: str,
-    new_corpus: DataFrame,
-    num_segments: int | None,
-    force: bool,
-    commit_token: str | None,
-) -> Index:
-    with open(os.path.join(index_dir, "stats.json")) as f:
-        st = json.load(f)
-    n_buckets = st["n_buckets"]
-    build_id = commit_token if commit_token is not None else uuid.uuid4().hex[:12]
-    has_positions = os.path.exists(os.path.join(index_dir, "positions"))
-    # Base state comes from the MANIFEST (complete groups only), not from
-    # raw doc_meta maxima: a crash between a previous append's data
-    # writes and its manifest row leaves orphan group partitions, and
-    # deriving g/base_doc from them would mint a fresh group id and
-    # duplicate those docs under new ids. Restricting to manifest-complete
-    # groups makes a retried append recompute the SAME group id, and the
-    # dynamic-overwrite writes below replace the orphans.
-    manifest0 = _read_manifest(spark, index_dir)
-    if manifest0 is None:
-        raise ValueError(f"{index_dir!r} holds no manifest; build it first")
-    max_complete = int(
-        manifest0.filter(F.col("status") == "complete")
-        .agg(F.max("group_id")).collect()[0][0]
-    )
-    doc_meta0 = spark.read.parquet(os.path.join(index_dir, "doc_meta")).filter(
-        F.col("group_id") <= max_complete
-    )
-    agg0 = doc_meta0.agg(
-        F.max("doc_id").alias("maxd"), F.max("segment_id").alias("maxs"),
-    ).collect()[0]
-    base_doc = int(agg0["maxd"]) + 1
-    base_seg = int(agg0["maxs"]) + 1
-    g = max_complete + 1
-
+    A writer that loses the commit race to another writer redoes the
+    group with the new snapshot's doc, segment and group ids."""
     if num_segments is None:
         num_segments = max(4, spark.sparkContext.defaultParallelism)
+    id_caches: list = []
     corpus = with_sha(new_corpus)
-    _id_caches: list = []
     if "doc_id" not in corpus.columns:
-        corpus = assign_doc_ids(corpus, num_segments, _cache_out=_id_caches)
-    corpus = corpus.withColumn("doc_id", F.col("doc_id") + F.lit(base_doc)).persist()
-    agg = corpus.agg(F.count("*").alias("n"), _fp_sum_agg().alias("fp")).collect()[0]
-    n_new, fp = int(agg["n"]), agg["fp"]
-    last = (
-        manifest0.filter(F.col("status") == "complete")
-        .orderBy(F.desc("group_id"))
-        .select("n_docs", "input_fingerprint", "num_segments", "num_groups",
-                "build_id")
-        .first()
-    )
-    if (
-        not force
-        and last is not None
-        and int(last["n_docs"]) == n_new
-        and int(last["input_fingerprint"]) == int(fp or 0)
-        # with a commit_token, only a replay of the SAME attempt skips —
-        # a distinct batch with coincidentally identical content appends
-        and (commit_token is None or last["build_id"] == commit_token)
-    ):
-        # The same corpus is already committed as the last complete group
-        # — this is a retry after a crash in the post-commit window
-        # (manifest row durable, term_dict/stats possibly stale). Repair
-        # by re-running the idempotent finalize; do NOT append the docs
-        # again under a new group id. Loud by design: a caller whose
-        # batch was NOT a crash retry must hear that it was dropped
-        # (pass force=True or a fresh commit_token to append anyway).
-        import warnings
+        corpus = assign_doc_ids(corpus, num_segments, _cache_out=id_caches)
+    corpus = corpus.persist()
+    n_new = corpus.count()
+    seg_size = max(1, math.ceil(n_new / num_segments))
 
-        warnings.warn(
-            f"append_documents({index_dir!r}): batch of {n_new} docs has "
-            f"the same content+metadata fingerprint"
-            + ("" if commit_token is None
-               else f" and commit_token {commit_token!r}")
-            + " as the last committed group — treating it as a crash "
-            "retry: repairing finalize, NOT appending again "
-            "(force=True overrides)"
-        )
-        total_segments, num_groups = int(last["num_segments"]), int(last["num_groups"])
-    else:
+    def attempt(snap: Snapshot) -> dict | None:
+        if snap.version < 0:
+            raise ValueError(f"{index_dir!r} holds no index; build it first")
+        if n_new == 0 or (txn is not None and snap.txns.get(txn[0], -1) >= txn[1]):
+            return None
         t0 = time.time()
-        seg_size = max(1, math.ceil(n_new / num_segments))
-        segment = ((F.col("doc_id") - F.lit(base_doc)) / F.lit(seg_size)).cast("int")
+        base_doc, base_seg = snap.next["doc"], snap.next["segment"]
         fused, postings, doc_meta, positions = build_segments(
-            corpus.withColumn("segment_id", segment + F.lit(base_seg))
+            corpus.withColumn(
+                "segment_id", (F.col("doc_id") / F.lit(seg_size)).cast("int") + F.lit(base_seg)
+            ).withColumn("doc_id", F.col("doc_id") + F.lit(base_doc))
             .repartition(num_segments, "segment_id"),
-            n_buckets, has_positions,
+            snap.geometry["n_buckets"], snap.geometry["with_positions"],
         )
-        # Phrase queries over appended docs must equal a from-scratch
-        # positions build (asserted in tests), so positions extend too.
-        _write_group(index_dir, g, n_buckets, postings, doc_meta, positions)
-        facets_json = os.path.join(index_dir, "facets.json")
-        if os.path.exists(facets_json) and os.path.exists(
-            os.path.join(index_dir, "facet_postings")
-        ):
-            # Maintain the facet field (build.with_facets sidecar).
-            with open(facets_json) as f:
-                fj = json.load(f)
-            _write_facet_group(index_dir, g, n_buckets, doc_meta, fj["expr"],
-                               fj.get("depth"))
-        total_segments, num_groups = st["num_segments"] + num_segments, g + 1
-        _manifest_row(index_dir, g, n_new, fp, t0, build_id, total_segments,
-                      num_groups, has_positions)
+        actions = _write_group(index_dir, snap.next["group"], snap.geometry["n_buckets"],
+                               postings, doc_meta, positions, snap.facets, t0)
         fused.unpersist()
+        actions["op"] = "append"
+        if txn is not None:
+            actions["txn"] = {"app_id": txn[0], "version": txn[1]}
+        return actions
 
-    _finalize(spark, index_dir, n_buckets, total_segments, build_id)
-    # Keep the resume sidecar in sync with the appended segment count.
-    _write_geometry(index_dir, total_segments, num_groups, has_positions)
-    corpus.unpersist()
-    for c in _id_caches:
-        c.unpersist()
+    try:
+        _transact(index_dir, attempt)
+    finally:
+        corpus.unpersist()
+        for c in id_caches:
+            c.unpersist()
     return load_index(spark, index_dir)
 
 
-def load_index(spark: SparkSession, index_dir: str) -> Index:
-    with open(os.path.join(index_dir, "stats.json")) as f:
-        st = json.load(f)
-    pos_path = os.path.join(index_dir, "positions")
-    positions = (
-        spark.read.parquet(pos_path) if os.path.exists(pos_path) else None
+def _table(spark: SparkSession, index_dir: str, snap: Snapshot, name: str):
+    """Table ``name`` as of ``snap``: its live files, read with the table
+    directory as basePath so the group_id/term_bucket partition columns
+    (and term_bucket pruning) stay. None when it has no live file."""
+    paths = sorted(os.path.join(index_dir, p) for p in snap.files if p.startswith(name + "/"))
+    if not paths:
+        return None
+    return spark.read.option("basePath", os.path.join(index_dir, name)).parquet(*paths)
+
+
+def _read_index(spark: SparkSession, index_dir: str, snap: Snapshot) -> Index:
+    if snap.version < 0:
+        raise ValueError(f"{index_dir!r} holds no committed index")
+    term_dict = (
+        _table(spark, index_dir, snap, "term_dict")
+        .groupBy("term", "term_bucket")
+        .agg(F.sum("doc_freq").alias("doc_freq"), F.sum("total_tf").alias("total_tf"))
+        .select("term", "doc_freq", "total_tf", "term_bucket")
     )
-    # Facet table only when BOTH the table and its facets.json sidecar
-    # exist: the persisted writer removes the sidecar first and writes it
-    # last, so any crash inside with_facets leaves table-without-sidecar
-    # — a torn state this guard treats as "no facets" (re-run
-    # with_facets) instead of serving an unmaintainable table whose
-    # appends would silently miss new docs.
-    facet_path = os.path.join(index_dir, "facet_postings")
-    facets_json = os.path.join(index_dir, "facets.json")
-    facet_postings = None
-    facet_expr = facet_depth = None
-    if os.path.exists(facet_path) and os.path.exists(facets_json):
-        facet_postings = spark.read.parquet(facet_path)
-        with open(facets_json) as f:
-            fj = json.load(f)
-        facet_expr, facet_depth = fj.get("expr"), fj.get("depth")
+    facets = snap.facets or {}
     return Index(
-        doc_meta=spark.read.parquet(os.path.join(index_dir, "doc_meta")),
-        postings=spark.read.parquet(os.path.join(index_dir, "postings")),
-        term_dict=spark.read.parquet(os.path.join(index_dir, "term_dict")),
-        stats=IndexStats(num_docs=st["num_docs"], total_tokens=st["total_tokens"]),
-        n_buckets=st["n_buckets"],
-        positions=positions,
-        facet_postings=facet_postings,
-        facet_expr=facet_expr,
-        facet_depth=facet_depth,
+        doc_meta=_table(spark, index_dir, snap, "doc_meta"),
+        postings=_table(spark, index_dir, snap, "postings"),
+        term_dict=term_dict,
+        stats=IndexStats(
+            num_docs=sum(s["n_docs"] for s in snap.groups.values()),
+            total_tokens=sum(s["total_tokens"] for s in snap.groups.values()),
+        ),
+        n_buckets=snap.geometry["n_buckets"],
+        positions=_table(spark, index_dir, snap, "positions"),
+        facet_postings=_table(spark, index_dir, snap, "facet_postings"),
+        facet_expr=facets.get("expr"),
+        facet_depth=facets.get("depth"),
     )
 
 
-def compact_index(
-    spark: SparkSession,
-    index_dir: str,
-    num_segments: int,
-    recompute_stats: bool = True,
-) -> Index:
-    """Persisted compaction (A10 merge x A12 layout): merge every
-    group/segment — purging tombstone files if a ``_deleted`` table ever
-    lands on disk is the caller's concern; in-memory deletes don't
-    persist — into a FRESH single-group index directory, then swap it in
-    with directory renames.
-
-    Swap protocol (crash-safe, re-runnable):
-
-    1. the whole new index is written to ``<dir>.compact_tmp`` and a
-       ``_COMPACT_DONE`` marker is the LAST file written there;
-    2. ``<dir>`` -> ``<dir>.compact_old``, then tmp -> ``<dir>`` (each
-       rename atomic on POSIX), then the old dir is deleted.
-
-    Crash before the marker: tmp is garbage, the live index is
-    untouched, re-run. Crash between the renames: the live dir is
-    missing but tmp carries the marker — the next :func:`compact_index`
-    (or any caller hitting the missing dir) completes the swap; the
-    recovery path runs FIRST on every invocation.
-
-    The streaming-ingest checkpoint (``_stream_checkpoint``) is
-    exactly-once STATE: it is COPIED into tmp before the completion
-    marker (so the swapped-in dir always carries it) and salvaged out
-    of any superseded directory before deletion — losing it would make
-    the next stream_ingest replay the whole source as duplicates.
-
-    Concurrency: holds the index's single-writer lock for the whole
-    merge+swap; concurrent :func:`append_documents` (including
-    streaming micro-batches) fail fast with :class:`WriterLockHeld`
-    instead of racing the directory swap.
-    """
-    with _writer_lock(index_dir, "compact"):
-        return _compact_index_locked(spark, index_dir, num_segments,
-                                     recompute_stats)
+def load_index(spark: SparkSession, index_dir: str) -> Index:
+    """The index as of the latest commit: reads exactly its live files
+    and sums the groups' term-dictionary partials and counts."""
+    return _read_index(spark, index_dir, snapshot(index_dir))
 
 
-def _compact_index_locked(
-    spark: SparkSession,
-    index_dir: str,
-    num_segments: int,
-    recompute_stats: bool,
-) -> Index:
-    import shutil
+def write_facets(spark: SparkSession, index_dir: str, facet_expr: str,
+                 depth: int | None) -> Index:
+    """Persist a facet field (:func:`sparktext.build.with_facets`) in one
+    commit: the facet postings of every live group, replacing any
+    earlier facet files, and the facet spec that appends and compaction
+    re-derive the field from."""
+    facets = {"expr": facet_expr, "depth": depth}
 
-    base = index_dir.rstrip("/")
-    tmp, old = base + ".compact_tmp", base + ".compact_old"
-    _recover_torn_swap(base)
-    shutil.rmtree(tmp, ignore_errors=True)
-    _salvage_stream_checkpoint(old, base)
-    shutil.rmtree(old, ignore_errors=True)
+    def attempt(snap: Snapshot) -> dict:
+        doc_meta = _read_index(spark, index_dir, snap).doc_meta
+        staging = _staging_dir(index_dir)
+        for g in sorted(snap.groups):
+            _stage_facets(staging, g, doc_meta.filter(F.col("group_id") == g), facets,
+                          snap.geometry["n_buckets"])
+        return {
+            "op": "facets", "facets": facets, "add": _publish(index_dir, staging),
+            "remove": sorted(p for p in snap.files if p.startswith("facet_postings/")),
+        }
 
+    _transact(index_dir, attempt)
+    return load_index(spark, index_dir)
+
+
+def compact_index(spark: SparkSession, index_dir: str, num_segments: int) -> Index:
+    """Persisted compaction (A10 merge x A12 layout): merge every live
+    group into one new group of ``num_segments`` segments, committed as
+    ONE commit that adds it and removes exactly the files it read. The
+    directory is never renamed, so the streaming checkpoint inside it
+    stays put, and readers of the previous version keep their files
+    until :func:`vacuum`. An append that commits first makes this
+    attempt lose the race; it then merges again, appended group
+    included."""
     from sparktext.merge import merge_segments
 
-    t0 = time.time()
-    idx = load_index(spark, base)
-    merged = merge_segments(idx, num_segments, recompute_stats=recompute_stats)
-    build_id = uuid.uuid4().hex[:12]
+    def attempt(snap: Snapshot) -> dict:
+        t0 = time.time()
+        merged = merge_segments(_read_index(spark, index_dir, snap), num_segments)
+        # merge numbers segments from 0; shift them past every id in use,
+        # as an append does.
+        base = F.lit(snap.next["segment"])
+        postings, doc_meta, positions = (
+            None if df is None else df.withColumn("segment_id", F.col("segment_id") + base)
+            for df in (merged.postings, merged.doc_meta, merged.positions)
+        )
+        actions = _write_group(index_dir, snap.next["group"], snap.geometry["n_buckets"],
+                               postings, doc_meta, positions, snap.facets, t0)
+        merged.unpersist()
+        actions.update(op="compact", remove=sorted(snap.files),
+                       drop_groups=sorted(snap.groups))
+        return actions
 
-    os.makedirs(tmp)
-    _write_group(tmp, 0, idx.n_buckets, merged.postings, merged.doc_meta,
-                 merged.positions)
-    merged.term_dict.write.parquet(os.path.join(tmp, "term_dict"))
-    if merged.facet_postings is not None and merged.facet_expr is not None:
-        _write_facet_group(tmp, 0, idx.n_buckets, merged.doc_meta,
-                           merged.facet_expr, merged.facet_depth)
-        with open(os.path.join(tmp, "facets.json"), "w") as f:
-            json.dump({"expr": merged.facet_expr, "depth": merged.facet_depth}, f)
+    _transact(index_dir, attempt)
+    return load_index(spark, index_dir)
 
-    srow = merged.doc_meta.agg(F.count("*").alias("n"), _fp_sum_agg().alias("fp")).collect()[0]
-    with open(os.path.join(tmp, "stats.json"), "w") as f:
-        json.dump({
-            "num_docs": int(srow["n"]),
-            "total_tokens": int(merged.stats.total_tokens),
-            "n_buckets": idx.n_buckets, "num_segments": num_segments,
-        }, f)
-    has_positions = merged.positions is not None
-    _write_geometry(tmp, num_segments, 1, has_positions)
-    _manifest_row(tmp, 0, srow["n"], srow["fp"], t0, build_id, num_segments, 1,
-                  has_positions)
-    _metrics_row(tmp, "compact", 0, srow["n"], t0, build_id)
-    # Stage the streaming checkpoint into tmp BEFORE the marker: once
-    # _COMPACT_DONE exists, tmp may be swapped in by recovery after any
-    # crash — it must already be a complete index INCLUDING the
-    # exactly-once state (a crash between the two renames used to strand
-    # the checkpoint in the doomed old dir).
-    live_ckpt = os.path.join(base, "_stream_checkpoint")
-    if os.path.exists(live_ckpt):
-        # A LIVE stream writes offset/commit WAL files outside the writer
-        # lock, so entries can appear/vanish mid-copy (round-5 advisory).
-        # Retry on vanished files; exactly-once does NOT depend on this
-        # copy being a perfect point-in-time snapshot — the commit_token
-        # replay discrimination in append re-deduplicates any micro-batch
-        # the checkpoint copy is behind on. Compaction under a live
-        # stream remains discouraged (the stream's own foreachBatch
-        # appends fail fast on the held writer lock).
-        for attempt in range(3):
-            dst = os.path.join(tmp, "_stream_checkpoint")
-            try:
-                shutil.copytree(live_ckpt, dst)
-                break
-            except (FileNotFoundError, shutil.Error):
-                shutil.rmtree(dst, ignore_errors=True)
-                if attempt == 2:
-                    raise
-    with open(os.path.join(tmp, "_COMPACT_DONE"), "w") as f:
-        f.write(build_id)
 
-    merged.unpersist()
-    os.rename(base, old)
-    os.rename(tmp, base)
-    # tmp carried the checkpoint copy; the salvage is a no-op here and
-    # covers only pre-staging layouts.
-    _salvage_stream_checkpoint(old, base)
-    shutil.rmtree(old, ignore_errors=True)
-    return load_index(spark, base)
+def vacuum(index_dir: str) -> None:
+    """Delete every file the latest version does not reference: what a
+    crashed or outraced writer left, and the files compaction or
+    with_facets removed. Run it with no writer active (a live writer's
+    published but not yet committed files are unreferenced too) and once
+    no reader still uses an older version. The streaming checkpoint is
+    left alone."""
+    snap = snapshot(index_dir)
+    keep = snap.files | {os.path.join(_LOG, f"{v:020d}.json") for v in range(snap.version + 1)}
+    for root, _, names in os.walk(index_dir, topdown=False):
+        rel = os.path.relpath(root, index_dir)
+        if rel.split(os.sep)[0] == STREAM_CHECKPOINT:
+            continue
+        for n in names:
+            if os.path.normpath(os.path.join(rel, n)) not in keep:
+                os.remove(os.path.join(root, n))
+        if rel != "." and not os.listdir(root):
+            os.rmdir(root)

@@ -115,9 +115,7 @@ def merge_segments(
     if facet_postings is not None and index.deleted is not None:
         if index.facet_expr is not None:
             facet_postings = encode_posting_blocks(
-                facet_posting_rows(
-                    doc_meta.drop("group_id"), index.facet_expr, index.facet_depth
-                ),
+                facet_posting_rows(doc_meta, index.facet_expr, index.facet_depth),
                 index.n_buckets,
             ).persist()
         else:

@@ -5,36 +5,38 @@ The reference is a batch library whose incremental story is
 ``add_document + commit`` (appending segments); the Spark-native
 equivalent of a long-running IndexWriter is a Structured Streaming file
 source feeding micro-batch commits. Each micro-batch routes through
-:func:`sparktext.manifest.append_documents` — one manifest GROUP per
-batch — so the streaming sink inherits the A12 crash-safety contract
-end-to-end:
+:func:`sparktext.manifest.append_documents` — one group, one commit of
+the index's log per batch — with ``txn=(query id, batch id)``, so the
+sink is exactly-once end to end (Delta Lake's idempotent-writer design):
 
 - Spark's streaming checkpoint guarantees each source file lands in
-  exactly one micro-batch;
-- a batch replayed after a crash re-runs ``append_documents`` with the
-  SAME content, which the append path recognizes (pre-manifest-commit
-  crash: same group id + dynamic partition overwrite replaces orphans;
-  post-commit crash: content-fingerprint match -> idempotent
-  re-finalize) — so replays never duplicate documents: end-to-end
-  exactly-once without any sink-side transaction log beyond the
-  manifest itself.
+  exactly one micro-batch id;
+- a batch Spark replays after a crash (the sink committed, the
+  checkpoint did not record it) carries the same batch id; the log
+  already holds that txn, so the append is a no-op. A later batch whose
+  content equals an earlier one's has a new batch id and appends.
+
+The query id is Spark's own, kept in the checkpoint: it survives restarts
+from that checkpoint, and a fresh checkpoint (whose batch ids restart at
+0) gets a fresh one. The sink finds it among the active queries by the
+unique name each start gives its query.
 
 ``trigger(availableNow=True)`` drains everything currently in the
 source and stops — the batch-job-with-streaming-semantics mode used for
 scheduled incremental index refreshes; omit it for a continuously
 running ingest.
 
-Compaction interplay: ``append_documents`` holds the index's
-single-writer lock, so a micro-batch that lands while
-:func:`sparktext.manifest.compact_index` is swapping directories fails
-fast with ``WriterLockHeld`` (failing the streaming query) instead of
-writing into a directory about to be deleted. Restarting the stream
-after the compaction replays that batch from the checkpoint — which
-compaction carries across its directory swap — and the batch's
-``commit_token`` keeps the replay exactly-once.
+Compaction interplay: a micro-batch and :func:`compact_index
+<sparktext.manifest.compact_index>` race for the next log version like
+any two writers, and the loser redoes its work on the winner's snapshot.
+Compaction never moves the index directory, so the checkpoint inside it
+stays where the stream left it.
 """
 
 from __future__ import annotations
+
+import os
+import uuid
 
 from pyspark.sql import SparkSession
 
@@ -65,8 +67,9 @@ def stream_ingest(
     the current max); dropping lets ``assign_doc_ids`` mint dense ids
     per batch — the default for real feeds.
     """
-    from sparktext.manifest import append_documents
+    from sparktext.manifest import STREAM_CHECKPOINT, append_documents
 
+    name = f"stream_ingest-{uuid.uuid4().hex}"
     reader = spark.readStream.schema(schema)
     stream = getattr(reader, fmt)(source_dir) if fmt in ("parquet", "json") \
         else reader.format(fmt).load(source_dir)
@@ -76,19 +79,15 @@ def stream_ingest(
             batch_df = batch_df.drop("doc_id")
         if batch_df.isEmpty():
             return
-        # commit_token = the streaming batch id: a crash-replay of the
-        # SAME batch is repaired (skip + re-finalize), while a later
-        # batch whose content happens to be identical (re-exported
-        # snapshot) still appends — content fingerprints alone cannot
-        # tell those apart.
+        query_id = next(q.id for q in spark.streams.active if q.name == name)
         append_documents(
             spark, index_dir, batch_df, num_segments=num_segments,
-            commit_token=f"stream-batch-{batch_id}",
+            txn=(f"stream_ingest:{query_id}", batch_id),
         )
 
     writer = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", f"{index_dir}/_stream_checkpoint")
+        stream.writeStream.queryName(name).foreachBatch(_sink)
+        .option("checkpointLocation", os.path.join(index_dir, STREAM_CHECKPOINT))
     )
     if available_now:
         writer = writer.trigger(availableNow=True)

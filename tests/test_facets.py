@@ -99,8 +99,8 @@ def test_facet_persisted_roundtrip_and_pruning(spark, micro_corpus, tmpdir):
 
 
 def test_facets_maintained_through_append(spark, micro_corpus, tmpdir):
-    """append_documents extends the facet table for the new group (via
-    the facets.json sidecar) — subtree queries stay complete."""
+    """append_documents extends the facet table for the new group (from
+    the facet spec in the commit log) — subtree queries stay complete."""
     from sparktext.build import build_index, with_facets
     from sparktext.manifest import append_documents, load_index
     from sparktext.query import facet_subtree_docs

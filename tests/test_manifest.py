@@ -1,10 +1,17 @@
-"""A12: persisted layout, resume, lineage, incremental append."""
+"""A12: persisted layout, commit log, resume, lineage, incremental append."""
 
+import os
 import shutil
 import tempfile
+import threading
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 from pyspark.sql import functions as F
+
+from sparktext import manifest
+
+FACET_EXPR = "concat('/', lang, '/', repo)"
 
 
 @pytest.fixture()
@@ -22,25 +29,63 @@ def _topk(index, qstr, k=12):
     return [(r["doc_id"], round(r["score"], 9)) for r in rows]
 
 
+def _halves(corpus):
+    """Docs 0-5, and docs 6-11 with local ids 0-5 (an append offsets
+    them back to 6-11)."""
+    second = corpus.filter(F.col("doc_id") >= 6).withColumn("doc_id", F.col("doc_id") - 6)
+    return corpus.filter(F.col("doc_id") < 6), second
+
+
+def _disk_files(d):
+    """Every file under ``d`` outside the log and the stream checkpoint."""
+    out = set()
+    for root, _, names in os.walk(d):
+        rel = os.path.relpath(root, d)
+        if rel.split(os.sep)[0] not in (manifest._LOG, manifest.STREAM_CHECKPOINT):
+            out |= {os.path.normpath(os.path.join(rel, n)) for n in names}
+    return out
+
+
+class _Crash(Exception):
+    """The writer died between two filesystem steps."""
+
+
+def _crash_before(monkeypatch, at):
+    """Fail the writer before its ``at``-th filesystem step: staging a
+    table, publishing the staged files, or creating a commit. Returns
+    the count of steps taken (``at=None`` never fails)."""
+    taken = [0]
+    for name in ("_stage", "_publish", "_commit"):
+        def step(*args, _real=getattr(manifest, name)):
+            if taken[0] == at:
+                raise _Crash
+            taken[0] += 1
+            return _real(*args)
+
+        monkeypatch.setattr(manifest, name, step)
+    return taken
+
+
 def test_persist_load_resume(spark, micro_corpus, micro_index, tmpdir):
     from sparktext.build import build_index
-    from sparktext.manifest import load_index
+    from sparktext.manifest import load_index, snapshot
 
     idx = build_index(spark, micro_corpus, num_segments=3, index_dir=tmpdir, num_groups=2)
     assert _topk(idx, "heavy") == _topk(micro_index, "heavy")
 
-    man = spark.read.parquet(f"{tmpdir}/_manifest")
-    assert man.filter("status = 'complete'").count() == 2
-    met = spark.read.parquet(f"{tmpdir}/_metrics")
-    assert met.filter("stage = 'finalize'").count() >= 1
+    # per-group lineage + metrics live in the log
+    snap = snapshot(tmpdir)
+    assert sorted(snap.groups) == [0, 1] and snap.version == 1
+    assert sum(s["n_docs"] for s in snap.groups.values()) == 12
+    assert all(s["wall_ms"] >= 0 and s["fingerprint"] for s in snap.groups.values())
 
     # resume: nothing to do, results unchanged
     idx2 = build_index(
         spark, micro_corpus, num_segments=3, index_dir=tmpdir, num_groups=2, resume=True
     )
     assert _topk(idx2, "apple banana") == _topk(micro_index, "apple banana")
-    # no duplicate group rows were appended
-    assert spark.read.parquet(f"{tmpdir}/_manifest").count() == 2
+    # no duplicate group was committed
+    assert snapshot(tmpdir).version == 1
 
     loaded = load_index(spark, tmpdir)
     assert loaded.stats.num_docs == micro_index.stats.num_docs
@@ -49,7 +94,7 @@ def test_persist_load_resume(spark, micro_corpus, micro_index, tmpdir):
 
 def test_append_equals_full_build(spark, micro_corpus, micro_index, tmpdir):
     from sparktext.build import build_index
-    from sparktext.manifest import append_documents
+    from sparktext.manifest import append_documents, snapshot
 
     first = micro_corpus.filter(F.col("doc_id") < 6)
     second = micro_corpus.filter(F.col("doc_id") >= 6).withColumn(
@@ -62,8 +107,7 @@ def test_append_equals_full_build(spark, micro_corpus, micro_index, tmpdir):
     for q in ["heavy", "apple banana", "+grape cherry", "apple -banana", "unique"]:
         assert _topk(idx, q) == _topk(micro_index, q), q
 
-    man = spark.read.parquet(f"{tmpdir}/_manifest")
-    assert man.count() == 2  # original group + appended group
+    assert len(snapshot(tmpdir).groups) == 2  # original group + appended group
 
 
 def test_append_then_merge(spark, micro_corpus, micro_index, tmpdir):
@@ -91,41 +135,43 @@ def test_fresh_build_refuses_nonempty_dir(spark, micro_corpus, tmpdir):
 
 def test_resume_adopts_geometry(spark, micro_corpus, micro_index, tmpdir):
     """Resuming at a different parallelism must NOT re-derive different
-    segment/group boundaries — the manifest's geometry wins."""
+    segment/group boundaries — the geometry of commit 0 wins."""
     from sparktext.build import build_index
+    from sparktext.manifest import snapshot
 
     build_index(spark, micro_corpus, num_segments=3, index_dir=tmpdir, num_groups=2)
     idx = build_index(
         spark, micro_corpus, num_segments=7, index_dir=tmpdir, num_groups=5, resume=True
     )
     assert _topk(idx, "heavy") == _topk(micro_index, "heavy")
-    assert spark.read.parquet(f"{tmpdir}/_manifest").count() == 2  # no extra groups
+    assert len(snapshot(tmpdir).groups) == 2  # no extra groups
 
 
-def test_resume_after_crash_between_data_and_manifest(spark, micro_corpus, micro_index, tmpdir):
-    """Simulated crash: group data written, manifest row NOT — the resumed
-    run must overwrite (not duplicate) the orphan group files."""
-    import os
-
+def test_resume_after_crash_between_data_and_manifest(
+    spark, micro_corpus, micro_index, tmpdir, monkeypatch
+):
+    """Crash after group 1's files are published, before its commit: the
+    files are orphans no reader sees, the resumed run commits the group
+    once, and vacuum leaves no duplicate rows on disk."""
     from sparktext.build import build_index
+    from sparktext.manifest import load_index, snapshot, vacuum
 
-    done = tmpdir + "/done"
-    crashed = tmpdir + "/crashed"
-    build_index(spark, micro_corpus, num_segments=3, index_dir=done, num_groups=2)
-    # reproduce the on-disk state after a crash: group 0's postings and
-    # doc_meta exist, no manifest, no term_dict/stats
-    for sub in ("postings", "doc_meta"):
-        src = os.path.join(done, sub)
-        dst = os.path.join(crashed, sub)
-        for part in os.listdir(src):
-            if part.startswith("group_id=0"):
-                shutil.copytree(os.path.join(src, part), os.path.join(dst, part))
+    # steps per group: stage postings, term_dict, doc_meta; publish; commit
+    _crash_before(monkeypatch, at=9)
+    with pytest.raises(_Crash):
+        build_index(spark, micro_corpus, num_segments=4, index_dir=tmpdir, num_groups=2)
+    monkeypatch.undo()
+    assert sorted(snapshot(tmpdir).groups) == [0]
+    assert load_index(spark, tmpdir).stats.num_docs == 6
+
     idx = build_index(
-        spark, micro_corpus, num_segments=3, index_dir=crashed, num_groups=2, resume=True
+        spark, micro_corpus, num_segments=4, index_dir=tmpdir, num_groups=2, resume=True
     )
     assert idx.stats.num_docs == micro_index.stats.num_docs  # no duplicates
+    assert idx.doc_meta.count() == 12
     assert _topk(idx, "heavy") == _topk(micro_index, "heavy")
-    assert spark.read.parquet(f"{crashed}/doc_meta").count() == 12
+    vacuum(tmpdir)
+    assert spark.read.parquet(f"{tmpdir}/doc_meta").count() == 12
 
 
 def test_positions_through_persistent_path(spark, micro_corpus, tmpdir):
@@ -197,32 +243,29 @@ def test_persisted_query_plan_prunes(spark, micro_corpus, tmpdir):
     assert "PartitionFilters: [isnotnull(term_bucket" in plan
 
 
-def test_geometry_sidecar_survives_first_group_crash(spark, micro_corpus, micro_index, tmpdir):
-    """Crash DURING the first group (data partially written, no manifest
-    row yet): a resume at different parallelism must adopt the geometry
-    sidecar, not re-derive boundaries — otherwise orphan partitions from
-    the crashed geometry survive as duplicate postings."""
-    import os
-
+def test_geometry_sidecar_survives_first_group_crash(
+    spark, micro_corpus, micro_index, tmpdir, monkeypatch
+):
+    """Crash DURING the first group (its files published, no commit yet):
+    a resume at a different parallelism must not load the crashed
+    geometry's orphan partitions as duplicate postings. Nothing was
+    committed, so the resume is a fresh build at the new geometry."""
     from sparktext.build import build_index
+    from sparktext.manifest import snapshot
 
-    done = tmpdir + "/done2"
-    crashed = tmpdir + "/crashed2"
-    build_index(spark, micro_corpus, num_segments=3, index_dir=done, num_groups=2)
-    for sub in ("postings", "doc_meta"):
-        src = os.path.join(done, sub)
-        dst = os.path.join(crashed, sub)
-        for part in os.listdir(src):
-            if part.startswith("group_id=0"):
-                shutil.copytree(os.path.join(src, part), os.path.join(dst, part))
-    # the sidecar was written before the first group write
-    shutil.copy(os.path.join(done, "geometry.json"), os.path.join(crashed, "geometry.json"))
+    _crash_before(monkeypatch, at=4)  # group 0's commit
+    with pytest.raises(_Crash):
+        build_index(spark, micro_corpus, num_segments=3, index_dir=tmpdir, num_groups=2)
+    monkeypatch.undo()
+    assert snapshot(tmpdir).version == -1 and _disk_files(tmpdir)
+
     idx = build_index(
-        spark, micro_corpus, num_segments=7, index_dir=crashed, num_groups=5, resume=True
+        spark, micro_corpus, num_segments=7, index_dir=tmpdir, num_groups=5, resume=True
     )
     assert idx.stats.num_docs == micro_index.stats.num_docs
-    assert spark.read.parquet(f"{crashed}/doc_meta").count() == 12
+    assert idx.doc_meta.count() == 12
     assert _topk(idx, "heavy") == _topk(micro_index, "heavy")
+    assert snapshot(tmpdir).geometry["num_segments"] == 7
 
 
 def test_append_extends_positions(spark, micro_corpus, tmpdir):
@@ -230,7 +273,7 @@ def test_append_extends_positions(spark, micro_corpus, tmpdir):
     group's positions partition — phrase queries over the union equal a
     from-scratch positions build."""
     from sparktext.build import build_index
-    from sparktext.manifest import append_documents
+    from sparktext.manifest import append_documents, snapshot
     from sparktext.query import phrase_docs
 
     full = build_index(
@@ -253,311 +296,335 @@ def test_append_extends_positions(spark, micro_corpus, tmpdir):
         b = sorted((r["doc_id"], round(r["score"], 9))
                    for r in phrase_docs(full, phrase).collect())
         assert a == b and a, phrase
-    man = spark.read.parquet(tmpdir + "/inc/_manifest")
-    assert man.filter("with_positions").count() == 2
+    snap = snapshot(tmpdir + "/inc")
+    assert snap.geometry["with_positions"] and len(snap.groups) == 2
+    assert {p.split("/")[1] for p in snap.files if p.startswith("positions/")} == {
+        "group_id=0", "group_id=1"}
 
 
-def test_append_crash_retry_no_duplicates(spark, micro_corpus, micro_index, tmpdir):
-    """Crash between an append's data writes and its manifest row: the
-    retried append must reuse the SAME group id and overwrite the orphan
-    partitions — no duplicate docs, no duplicate postings."""
-    import os
-
+def test_append_crash_retry_no_duplicates(spark, micro_corpus, micro_index, tmpdir, monkeypatch):
+    """Crash between an append's data writes and its commit: the retried
+    append commits the batch once — no duplicate docs, no duplicate
+    postings."""
     from sparktext.build import build_index
-    from sparktext.manifest import append_documents
+    from sparktext.manifest import append_documents, load_index
 
-    first = micro_corpus.filter(F.col("doc_id") < 6)
-    second = micro_corpus.filter(F.col("doc_id") >= 6).withColumn(
-        "doc_id", F.col("doc_id") - 6
-    )
+    first, second = _halves(micro_corpus)
     build_index(spark, first, num_segments=2, index_dir=tmpdir, num_groups=1)
-    append_documents(spark, tmpdir, second, num_segments=2)
-    # reproduce the crash state: appended group's data on disk, but the
-    # manifest and stats rolled back to the pre-append state
-    man = spark.read.parquet(tmpdir + "/_manifest")
-    pre = man.orderBy("group_id").limit(1)
-    pre_rows = pre.collect()
-    spark.createDataFrame(pre_rows, man.schema).write.mode("overwrite").parquet(
-        tmpdir + "/_manifest_new"
-    )
-    shutil.rmtree(tmpdir + "/_manifest")
-    os.rename(tmpdir + "/_manifest_new", tmpdir + "/_manifest")
+    _crash_before(monkeypatch, at=4)  # the append's commit
+    with pytest.raises(_Crash):
+        append_documents(spark, tmpdir, second, num_segments=2)
+    monkeypatch.undo()
+    assert load_index(spark, tmpdir).stats.num_docs == 6
 
     idx = append_documents(spark, tmpdir, second, num_segments=2)
     assert idx.stats.num_docs == 12
-    assert spark.read.parquet(tmpdir + "/doc_meta").count() == 12
+    assert idx.doc_meta.count() == 12
     assert _topk(idx, "heavy") == _topk(micro_index, "heavy")
     assert _topk(idx, "apple banana") == _topk(micro_index, "apple banana")
 
 
 def test_append_retry_after_postcommit_crash(spark, micro_corpus, micro_index, tmpdir):
-    """Crash AFTER the manifest commit but BEFORE finalize: the group's
-    data + manifest row are durable but term_dict/stats are stale. A
-    retried append must detect the committed fingerprint and re-run the
-    idempotent finalize — NOT append the same docs again; force=True is
-    the intentional-double-add escape."""
-    import os
-
+    """A crash AFTER the commit, before the caller saw it: a retry with
+    the same txn lands nothing. A new txn version, or no txn, always
+    appends — identical content under different metadata included."""
     from sparktext.build import build_index
-    from sparktext.manifest import append_documents
+    from sparktext.manifest import append_documents, snapshot
 
-    first = micro_corpus.filter(F.col("doc_id") < 6)
-    second = micro_corpus.filter(F.col("doc_id") >= 6).withColumn(
-        "doc_id", F.col("doc_id") - 6
-    )
+    first, second = _halves(micro_corpus)
     build_index(spark, first, num_segments=2, index_dir=tmpdir, num_groups=1)
-    with open(os.path.join(str(tmpdir), "stats.json")) as f:
-        stale_stats = f.read()
-    append_documents(spark, tmpdir, second, num_segments=2)
-    # reproduce the crash state: roll stats.json back to pre-append
-    # (finalize "never ran"); manifest + group data stay durable
-    with open(os.path.join(str(tmpdir), "stats.json"), "w") as f:
-        f.write(stale_stats)
+    append_documents(spark, tmpdir, second, num_segments=2, txn=("feed", 0))
+    version = snapshot(tmpdir).version
 
-    idx = append_documents(spark, tmpdir, second, num_segments=2)
-    assert idx.stats.num_docs == 12
-    assert spark.read.parquet(f"{tmpdir}/_manifest").count() == 2
-    assert spark.read.parquet(f"{tmpdir}/doc_meta").count() == 12
+    idx = append_documents(spark, tmpdir, second, num_segments=2, txn=("feed", 0))
+    assert idx.stats.num_docs == 12 and snapshot(tmpdir).version == version
     assert _topk(idx, "heavy") == _topk(micro_index, "heavy")
     assert _topk(idx, "apple banana") == _topk(micro_index, "apple banana")
 
-    idx3 = append_documents(spark, tmpdir, second, num_segments=2, force=True)
+    idx3 = append_documents(spark, tmpdir, second, num_segments=2, txn=("feed", 1))
     assert idx3.stats.num_docs == 18
-    assert spark.read.parquet(f"{tmpdir}/_manifest").count() == 3
+    moved = second.withColumn("repo", F.lit("mirror"))
+    idx4 = append_documents(spark, tmpdir, moved, num_segments=2)
+    assert idx4.stats.num_docs == 24
+    assert len(snapshot(tmpdir).groups) == 4
 
 
 def test_compact_index_roundtrip(spark, micro_corpus, micro_index, tmpdir):
-    """Persisted compaction: multi-group index -> single-group directory
-    via the atomic-swap protocol; queries, phrases and facets all equal
-    the pre-compaction index; torn-swap recovery completes the swap."""
-    import os
-
+    """Persisted compaction: multi-group index -> one group in one
+    commit; queries, phrases and facets all equal the pre-compaction
+    index; resume afterwards is a no-op."""
     from sparktext.build import build_index, with_facets
-    from sparktext.manifest import compact_index, load_index
-    from sparktext.query import facet_subtree_docs
+    from sparktext.manifest import compact_index, load_index, snapshot, vacuum
+    from sparktext.query import facet_subtree_docs, phrase_docs
 
     d = os.path.join(str(tmpdir), "idx")
     build_index(spark, micro_corpus, num_segments=4, index_dir=d,
                 num_groups=2, with_positions=True)
-    with_facets(load_index(spark, d), "concat('/', lang, '/', repo)", index_dir=d)
+    with_facets(load_index(spark, d), FACET_EXPR, index_dir=d)
 
     idx = compact_index(spark, d, num_segments=2)
     assert idx.stats.num_docs == 12
-    man = spark.read.parquet(f"{d}/_manifest")
-    assert man.count() == 1 and man.collect()[0]["num_groups"] == 1
+    assert len(snapshot(d).groups) == 1
     for q in ["heavy", "apple banana", "+grape cherry", "apple -banana"]:
         assert _topk(idx, q) == _topk(micro_index, q), q
-    from sparktext.query import phrase_docs
     assert phrase_docs(idx, ["apple", "banana"]).count() == 3
     assert facet_subtree_docs(idx, "/py").count() == 7
     # idempotent re-run
     idx2 = compact_index(spark, d, num_segments=2)
     assert idx2.stats.num_docs == 12
-
-    # torn swap: live dir renamed away, tmp holds the DONE marker -> the
-    # next compact_index completes the swap before doing anything else
-    os.rename(d, d + ".compact_tmp")
-    # (simulate: the tmp IS a complete index; marker from the last run)
-    with open(d + ".compact_tmp/_COMPACT_DONE", "w") as f:
-        f.write("x")
-    idx3 = compact_index(spark, d, num_segments=2)
-    assert idx3.stats.num_docs == 12
+    vacuum(d)
+    assert _disk_files(d) == snapshot(d).files
+    assert _topk(load_index(spark, d), "heavy") == _topk(micro_index, "heavy")
 
     # resume=True on the compacted dir adopts its geometry (incl. the
-    # with_positions flag) and is a no-op re-finalize
+    # with_positions flag) and commits nothing
+    version = snapshot(d).version
     idx4 = build_index(spark, micro_corpus, num_segments=99, index_dir=d,
                        resume=True, num_groups=7)
     assert idx4.stats.num_docs == 12
     assert idx4.positions is not None
-    assert spark.read.parquet(f"{d}/_manifest").count() == 1
+    assert snapshot(d).version == version
 
 
-def test_writer_lock_blocks_concurrent_append(spark, micro_corpus, tmpdir):
-    """Single-writer guard: an append launched while a compaction (or
-    another append) holds the lock fails fast with WriterLockHeld and
-    neither loses nor duplicates the batch — after the holder releases,
-    the same append commits exactly once."""
-    import os
-
+def test_compaction_carries_stream_checkpoint(spark, micro_corpus, tmpdir, monkeypatch):
+    """The streaming checkpoint inside the index survives a clean
+    compaction, a crashed one, and vacuum: compaction never moves the
+    directory."""
     from sparktext.build import build_index
-    from sparktext.manifest import WriterLockHeld, _writer_lock, append_documents
-
-    d = os.path.join(str(tmpdir), "idx")
-    first = micro_corpus.filter(F.col("doc_id") < 6)
-    second = micro_corpus.filter(F.col("doc_id") >= 6).withColumn(
-        "doc_id", F.col("doc_id") - 6
-    )
-    build_index(spark, first, num_segments=2, index_dir=d, num_groups=1)
-
-    with _writer_lock(d, "compact"):  # live holder: this very pid
-        with pytest.raises(WriterLockHeld):
-            append_documents(spark, d, second, num_segments=2)
-    # nothing was lost: index untouched, lock released, retry commits
-    assert spark.read.parquet(f"{d}/doc_meta").count() == 6
-    idx = append_documents(spark, d, second, num_segments=2)
-    assert idx.stats.num_docs == 12
-    assert spark.read.parquet(f"{d}/_manifest").count() == 2
-    # the lock file is gone after a successful append
-    assert not os.path.exists(d + ".writer_lock")
-
-
-def test_stale_writer_lock_is_broken(spark, micro_corpus, tmpdir):
-    """A lock whose holder pid is dead must not wedge the index."""
-    import json as _json
-    import os
-
-    from sparktext.build import build_index
-    from sparktext.manifest import append_documents
-
-    d = os.path.join(str(tmpdir), "idx")
-    first = micro_corpus.filter(F.col("doc_id") < 6)
-    second = micro_corpus.filter(F.col("doc_id") >= 6).withColumn(
-        "doc_id", F.col("doc_id") - 6
-    )
-    build_index(spark, first, num_segments=2, index_dir=d, num_groups=1)
-    with open(d + ".writer_lock", "w") as f:
-        _json.dump({"pid": 2**22 + 12345, "op": "compact", "ts": 0}, f)
-    with pytest.warns(UserWarning, match="stale"):
-        idx = append_documents(spark, d, second, num_segments=2)
-    assert idx.stats.num_docs == 12
-
-
-def test_stale_lock_claim_of_live_lock_backs_out(tmpdir, monkeypatch):
-    """Two waiters see the same dead pid; the winner breaks the stale
-    lock and takes a live one before the loser's claim rename runs. The
-    loser's rename then grabs the LIVE lock: it must put the file back
-    and raise, not break it."""
-    import json as _json
-    import os
-
-    from sparktext import manifest
-    from sparktext.manifest import WriterLockHeld, _writer_lock
-
-    d = os.path.join(str(tmpdir), "idx")
-    path = d + ".writer_lock"
-    with open(path, "w") as f:
-        _json.dump({"pid": 2**22 + 12345, "op": "compact", "ts": 0}, f)
-    live = {"pid": os.getpid(), "op": "append", "ts": 1}
-    real_rename = os.rename
-
-    def racing_rename(src, dst):
-        if src == path:  # the winner swaps in its live lock first
-            os.unlink(path)
-            with open(path, "w") as f:
-                _json.dump(live, f)
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(manifest.os, "rename", racing_rename)
-    with pytest.raises(WriterLockHeld):
-        with _writer_lock(d, "append"):
-            pass
-    monkeypatch.undo()
-    with open(path) as f:
-        assert _json.load(f) == live
-    assert [p for p in os.listdir(str(tmpdir)) if p != "idx.writer_lock"] == []
-
-
-def test_append_skip_warns_and_metadata_change_appends(
-    spark, micro_corpus, tmpdir
-):
-    """The crash-retry skip is LOUD, and it no longer swallows a batch
-    whose content matches but whose metadata differs: the fingerprint
-    folds repo/path/commit/lang, so only a true replay (same content AND
-    metadata, or same commit_token) is treated as a crashed retry."""
-    import os
-
-    from sparktext.build import build_index
-    from sparktext.manifest import append_documents
-
-    d = os.path.join(str(tmpdir), "idx")
-    first = micro_corpus.filter(F.col("doc_id") < 6)
-    second = micro_corpus.filter(F.col("doc_id") >= 6).withColumn(
-        "doc_id", F.col("doc_id") - 6
-    )
-    build_index(spark, first, num_segments=2, index_dir=d, num_groups=1)
-    append_documents(spark, d, second, num_segments=2)
-
-    # exact replay (same content + metadata): skipped, loudly
-    with pytest.warns(UserWarning, match="crash retry"):
-        idx = append_documents(spark, d, second, num_segments=2)
-    assert idx.stats.num_docs == 12
-
-    # same CONTENT under different metadata: a real new batch — appends
-    moved = second.withColumn("repo", F.lit("mirror")).withColumn(
-        "path", F.concat(F.lit("mirror/"), F.col("path"))
-    )
-    idx2 = append_documents(spark, d, moved, num_segments=2)
-    assert idx2.stats.num_docs == 18
-    assert spark.read.parquet(f"{d}/_manifest").count() == 3
-
-
-def test_compaction_carries_stream_checkpoint(spark, micro_corpus, tmpdir):
-    """The streaming checkpoint survives (a) a clean compaction, (b) a
-    crash between the two swap renames — the window that used to strand
-    it in the doomed .compact_old dir — and (c) a pre-staging torn swap
-    where only the old dir still holds it."""
-    import os
-
-    from sparktext.build import build_index
-    from sparktext.manifest import compact_index
+    from sparktext.manifest import compact_index, vacuum
 
     d = os.path.join(str(tmpdir), "idx")
     build_index(spark, micro_corpus, num_segments=4, index_dir=d, num_groups=2)
-    ck = os.path.join(d, "_stream_checkpoint")
-    os.makedirs(os.path.join(ck, "offsets"))
-    with open(os.path.join(ck, "offsets", "0"), "w") as f:
+    ck = os.path.join(d, manifest.STREAM_CHECKPOINT, "offsets", "0")
+    os.makedirs(os.path.dirname(ck))
+    with open(ck, "w") as f:
         f.write("batch-0-state")
 
-    # (a) clean compaction
     compact_index(spark, d, num_segments=2)
-    with open(os.path.join(ck, "offsets", "0")) as f:
-        assert f.read() == "batch-0-state"
-
-    # (b) crash between rename(base, old) and rename(tmp, base): tmp is
-    # a complete index CARRYING the staged checkpoint copy. Reproduce by
-    # replaying compaction's end state by hand.
-    shutil.copytree(d, d + ".compact_tmp")
-    with open(d + ".compact_tmp/_COMPACT_DONE", "w") as f:
-        f.write("x")
-    os.rename(d, d + ".compact_old")
-    idx = compact_index(spark, d, num_segments=2)
-    assert idx.stats.num_docs == 12
-    with open(os.path.join(ck, "offsets", "0")) as f:
-        assert f.read() == "batch-0-state"
-    assert not os.path.exists(d + ".compact_old")
-
-    # (c) pre-staging layout: tmp lacks the checkpoint, old has it
-    shutil.copytree(d, d + ".compact_tmp")
-    shutil.rmtree(d + ".compact_tmp/_stream_checkpoint")
-    with open(d + ".compact_tmp/_COMPACT_DONE", "w") as f:
-        f.write("x")
-    os.rename(d, d + ".compact_old")
-    idx = compact_index(spark, d, num_segments=2)
-    assert idx.stats.num_docs == 12
-    with open(os.path.join(ck, "offsets", "0")) as f:
+    _crash_before(monkeypatch, at=4)  # the compaction's commit
+    with pytest.raises(_Crash):
+        compact_index(spark, d, num_segments=2)
+    monkeypatch.undo()
+    vacuum(d)
+    with open(ck) as f:
         assert f.read() == "batch-0-state"
 
 
-def test_append_recovers_torn_compaction_swap(spark, micro_corpus, tmpdir):
-    """An append hitting the missing-base/tmp-complete torn state (crash
-    between compaction's renames) completes the swap under the lock and
-    then commits the batch — no lost index, no lost batch."""
-    import os
-
+def test_append_recovers_torn_compaction_swap(spark, micro_corpus, micro_index, tmpdir,
+                                              monkeypatch):
+    """An append after a compaction that crashed before its commit finds
+    the index at its last version and commits the batch — no lost
+    index, no lost batch; vacuum clears the compaction's leftovers."""
     from sparktext.build import build_index
-    from sparktext.manifest import append_documents
+    from sparktext.manifest import append_documents, compact_index, snapshot, vacuum
 
-    d = os.path.join(str(tmpdir), "idx")
-    first = micro_corpus.filter(F.col("doc_id") < 6)
-    second = micro_corpus.filter(F.col("doc_id") >= 6).withColumn(
-        "doc_id", F.col("doc_id") - 6
-    )
-    build_index(spark, first, num_segments=2, index_dir=d, num_groups=1)
-    os.rename(d, d + ".compact_tmp")
-    with open(d + ".compact_tmp/_COMPACT_DONE", "w") as f:
-        f.write("x")
+    first, second = _halves(micro_corpus)
+    build_index(spark, first, num_segments=2, index_dir=tmpdir, num_groups=1)
+    _crash_before(monkeypatch, at=4)  # the compaction's commit
+    with pytest.raises(_Crash):
+        compact_index(spark, tmpdir, num_segments=1)
+    monkeypatch.undo()
 
-    idx = append_documents(spark, d, second, num_segments=2)
+    idx = append_documents(spark, tmpdir, second, num_segments=2)
     assert idx.stats.num_docs == 12
-    assert spark.read.parquet(f"{d}/doc_meta").count() == 12
-    assert not os.path.exists(d + ".compact_tmp")
+    assert idx.doc_meta.count() == 12
+    assert _topk(idx, "apple banana") == _topk(micro_index, "apple banana")
+    vacuum(tmpdir)
+    assert _disk_files(tmpdir) == snapshot(tmpdir).files
+
+
+def _race_at_commit(monkeypatch):
+    """Hold the first two commit attempts until both writers reach
+    theirs, so they race for the same version; returns the versions
+    attempted."""
+    real = manifest._commit
+    barrier = threading.Barrier(2, timeout=300)
+    lock = threading.Lock()
+    versions = []
+
+    def racing_commit(index_dir, version, actions):
+        with lock:
+            versions.append(version)
+            first_two = len(versions) <= 2
+        if first_two:
+            barrier.wait()
+        return real(index_dir, version, actions)
+
+    monkeypatch.setattr(manifest, "_commit", racing_commit)
+    return versions
+
+
+def _by_path(index, qstr):
+    """Top-k as (path, score): comparable across doc-id assignments."""
+    from sparktext.query import matched_docs, parse_query
+    from sparktext.topk import top_k
+
+    paths = {r["doc_id"]: r["path"] for r in index.doc_meta.collect()}
+    rows = top_k(matched_docs(index, parse_query(qstr)), 12).collect()
+    return sorted((paths[r["doc_id"]], round(r["score"], 9)) for r in rows)
+
+
+def _assert_all_docs_once(index, micro_index):
+    meta = index.doc_meta.select("doc_id", "path").collect()
+    assert len({r["doc_id"] for r in meta}) == len(meta) == 12
+    assert sorted(r["path"] for r in meta) == sorted(
+        r["path"] for r in micro_index.doc_meta.collect())
+    for q in ("heavy", "apple banana"):
+        assert _by_path(index, q) == _by_path(micro_index, q), q
+
+
+def test_concurrent_appends_both_land(spark, micro_corpus, micro_index, tmpdir, monkeypatch):
+    """Two appends race for the same log version: exactly one wins, the
+    other redoes its group with the new snapshot's ids and commits next.
+    Both batches land, no doc is lost or duplicated."""
+    from sparktext.build import build_index
+    from sparktext.manifest import append_documents, load_index, snapshot
+
+    build_index(spark, micro_corpus.filter(F.col("doc_id") < 4), num_segments=2,
+                index_dir=tmpdir, num_groups=1)
+    batches = [
+        micro_corpus.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < lo + 4))
+        .withColumn("doc_id", F.col("doc_id") - lo)
+        for lo in (4, 8)
+    ]
+    versions = _race_at_commit(monkeypatch)
+    with ThreadPoolExecutor(2) as pool:
+        futures = [pool.submit(append_documents, spark, tmpdir, b, 2) for b in batches]
+        for fut in futures:
+            fut.result(timeout=600)
+    assert versions == [1, 1, 2]
+    _assert_all_docs_once(load_index(spark, tmpdir), micro_index)
+    # the loser deleted its own files: nothing is left unreferenced
+    assert _disk_files(tmpdir) == snapshot(tmpdir).files
+
+
+def test_append_races_compaction(spark, micro_corpus, micro_index, tmpdir, monkeypatch):
+    """An append and a compaction race for the same version: whichever
+    loses redoes its work on the winner's snapshot, so the batch lands
+    once and the compaction covers what it read."""
+    from sparktext.build import build_index
+    from sparktext.manifest import append_documents, compact_index, load_index, snapshot
+
+    first, second = _halves(micro_corpus)
+    build_index(spark, first, num_segments=2, index_dir=tmpdir, num_groups=2)
+    read = snapshot(tmpdir).files
+    versions = _race_at_commit(monkeypatch)
+    with ThreadPoolExecutor(2) as pool:
+        futures = [pool.submit(compact_index, spark, tmpdir, 1),
+                   pool.submit(append_documents, spark, tmpdir, second, 2)]
+        for fut in futures:
+            fut.result(timeout=600)
+    assert versions == [2, 2, 3]
+    _assert_all_docs_once(load_index(spark, tmpdir), micro_index)
+    # unreferenced now: only the files compaction removed (until vacuum)
+    assert _disk_files(tmpdir) == snapshot(tmpdir).files | read
+
+
+def _crash_scenario(name, spark, corpus, template):
+    """Prepare ``template`` at the old version of writer ``name``; return
+    ``(op, retry)``, each taking the index directory."""
+    from sparktext.build import build_index, with_facets
+    from sparktext.manifest import append_documents, compact_index, load_index
+
+    first, second = _halves(corpus)
+
+    def build(d, resume=False):
+        return build_index(spark, corpus, num_segments=2, index_dir=d, num_groups=2,
+                           resume=resume)
+
+    def resume(d):
+        return build(d, resume=True)
+
+    os.makedirs(template)
+    if name == "build":
+        return build, resume
+    if name == "resume":
+        with pytest.MonkeyPatch.context() as mp:
+            _crash_before(mp, at=5)  # group 1's first step
+            with pytest.raises(_Crash):
+                build(template)
+        return resume, resume
+    if name == "append":
+        build_index(spark, first, num_segments=2, index_dir=template, num_groups=1)
+
+        def append(d):
+            return append_documents(spark, d, second, num_segments=2)
+
+        return append, append
+
+    def facets(d):
+        return with_facets(load_index(spark, d), FACET_EXPR, index_dir=d)
+
+    def compact(d):
+        return compact_index(spark, d, num_segments=1)
+
+    build(template)
+    if name == "with_facets":
+        return facets, facets
+    facets(template)
+    return compact, compact
+
+
+@pytest.mark.parametrize("name", ["build", "resume", "append", "with_facets", "compact"])
+def test_crash_between_every_filesystem_step(spark, micro_corpus, tmpdir, monkeypatch, name):
+    """Fail the writer before each of its filesystem steps in turn.
+    After each failure the index loads at a committed version between
+    the old and the new one, whose results equal an in-memory build over
+    its committed docs; one retry lands the operation exactly once;
+    vacuum leaves exactly the files the log references."""
+    from sparktext.build import build_index
+    from sparktext.manifest import load_index, snapshot, vacuum
+    from sparktext.query import facet_subtree_docs
+
+    refs = {}
+
+    def check(d):
+        """Assert the loaded index equals an in-memory build over the
+        docs it holds; return those docs."""
+        idx = load_index(spark, d)
+        docs = tuple(sorted(r["doc_id"] for r in idx.doc_meta.select("doc_id").collect()))
+        if docs not in refs:
+            refs[docs] = build_index(
+                spark, micro_corpus.filter(F.col("doc_id").isin(list(docs))), num_segments=2)
+        assert idx.stats.num_docs == len(docs)
+        for q in ("heavy", "apple banana"):
+            assert _topk(idx, q) == _topk(refs[docs], q), q
+        if snapshot(d).facets is not None:
+            py = {r["doc_id"] for r in refs[docs].doc_meta.collect() if r["lang"] == "py"}
+            assert {r["doc_id"] for r in facet_subtree_docs(idx, "/py").collect()} == py
+        return docs
+
+    template = os.path.join(tmpdir, "template")
+    op, retry = _crash_scenario(name, spark, micro_corpus, template)
+    old = snapshot(template).version
+
+    def fresh(tag):
+        d = os.path.join(tmpdir, tag)
+        shutil.copytree(template, d)
+        return d
+
+    clean = fresh("clean")
+    with monkeypatch.context() as mp:
+        taken = _crash_before(mp, at=None)
+        op(clean)
+    steps, new = taken[0], snapshot(clean).version
+    want = check(clean)
+    assert steps >= 3 and new > old
+
+    for at in range(steps):
+        d = fresh(f"crash{at}")
+        with monkeypatch.context() as mp:
+            _crash_before(mp, at=at)
+            with pytest.raises(_Crash):
+                op(d)
+        assert old <= snapshot(d).version < new, at
+        if snapshot(d).version >= 0:
+            check(d)
+        retry(d)
+        snap = snapshot(d)
+        assert snap.version == new, at
+        assert check(d) == want, at
+        vacuum(d)
+        assert _disk_files(d) == snap.files, at
+        check(d)
+        shutil.rmtree(d)

@@ -1,4 +1,4 @@
-"""Structured Streaming ingest -> crash-safe micro-batch appends."""
+"""Structured Streaming ingest -> exactly-once micro-batch appends."""
 
 from __future__ import annotations
 
@@ -19,9 +19,9 @@ def _topk(index, qstr, k=12):
 def test_stream_ingest_incremental(spark, micro_corpus, micro_index, tmpdir):
     """Two file-source waves drained by availableNow streams must equal
     the from-scratch batch build over the union corpus — and a re-run
-    with nothing new must be a no-op (checkpoint + fingerprint skip)."""
+    with nothing new must be a no-op (the checkpoint has no new batch)."""
     from sparktext.build import build_index
-    from sparktext.manifest import load_index
+    from sparktext.manifest import load_index, snapshot
     from sparktext.streaming import stream_ingest
 
     idx_dir = str(tmpdir.join("idx"))
@@ -52,17 +52,17 @@ def test_stream_ingest_incremental(spark, micro_corpus, micro_index, tmpdir):
     for qs in ["heavy", "apple banana", "+grape cherry", "unique"]:
         assert _topk(idx, qs) == _topk(micro_index, qs), qs
 
-    # drained stream re-run: no new files -> no new groups
-    n_groups = spark.read.parquet(f"{idx_dir}/_manifest").count()
+    # drained stream re-run: no new files -> no new commit
+    version = snapshot(idx_dir).version
     q = stream_ingest(spark, idx_dir, src_dir, num_segments=2)
     q.awaitTermination()
-    assert spark.read.parquet(f"{idx_dir}/_manifest").count() == n_groups
+    assert snapshot(idx_dir).version == version
 
 
 def test_stream_identical_content_batches_both_append(spark, micro_corpus, tmpdir):
     """Two DISTINCT micro-batches carrying identical rows must BOTH
-    index (the commit_token distinguishes a new batch from a crash
-    replay of the previous one — content fingerprints alone cannot)."""
+    index (the batch id in the sink's txn distinguishes a new batch
+    from a replay of the previous one; content alone cannot)."""
     from sparktext.build import build_index
     from sparktext.manifest import load_index
     from sparktext.streaming import stream_ingest
@@ -84,12 +84,50 @@ def test_stream_identical_content_batches_both_append(spark, micro_corpus, tmpdi
     assert load_index(spark, idx_dir).stats.num_docs == 18
 
 
-def test_compaction_preserves_stream_checkpoint(spark, micro_corpus, tmpdir):
-    """compact_index must carry the streaming checkpoint across its
-    directory swap — losing it would replay the whole source as new
-    docs on the next stream_ingest run."""
+def test_stream_replayed_batch_lands_once(spark, micro_corpus, tmpdir, monkeypatch):
+    """A crash after the sink committed but before Spark recorded the
+    batch makes Spark run the sink again with the same batch id: the
+    log already holds that txn, so exactly one group lands."""
+    from sparktext import manifest
     from sparktext.build import build_index
-    from sparktext.manifest import compact_index, load_index
+    from sparktext.manifest import load_index, snapshot
+    from sparktext.streaming import stream_ingest
+
+    idx_dir = str(tmpdir.join("idx4"))
+    src_dir = str(tmpdir.join("feed4"))
+    os.makedirs(src_dir, exist_ok=True)
+    build_index(spark, micro_corpus.filter(F.col("doc_id") < 6),
+                num_segments=2, index_dir=idx_dir, num_groups=1)
+    micro_corpus.filter(F.col("doc_id") >= 6).coalesce(1) \
+        .write.mode("append").parquet(src_dir)
+
+    txns = []
+    real = manifest.append_documents
+
+    def spy(*args, txn=None, **kwargs):
+        txns.append(txn)
+        return real(*args, txn=txn, **kwargs)
+
+    monkeypatch.setattr(manifest, "append_documents", spy)
+    stream_ingest(spark, idx_dir, src_dir, num_segments=2).awaitTermination()
+    # forget that batch 0 completed: the restart replays it
+    commits = os.path.join(idx_dir, manifest.STREAM_CHECKPOINT, "commits")
+    for name in ("0", ".0.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+    stream_ingest(spark, idx_dir, src_dir, num_segments=2).awaitTermination()
+
+    assert len(txns) == 2 and txns[0] == txns[1] and txns[0][1] == 0
+    assert len(snapshot(idx_dir).groups) == 2
+    assert load_index(spark, idx_dir).stats.num_docs == 12
+
+
+def test_compaction_preserves_stream_checkpoint(spark, micro_corpus, tmpdir):
+    """compact_index must leave the streaming checkpoint in place —
+    losing it would replay the whole source as new docs on the next
+    stream_ingest run."""
+    from sparktext.build import build_index
+    from sparktext.manifest import compact_index, load_index, snapshot
     from sparktext.streaming import stream_ingest
 
     idx_dir = str(tmpdir.join("idx3"))
@@ -107,4 +145,4 @@ def test_compaction_preserves_stream_checkpoint(spark, micro_corpus, tmpdir):
     # nothing new in the source: a drained re-run must NOT re-ingest
     stream_ingest(spark, idx_dir, src_dir, num_segments=2).awaitTermination()
     assert load_index(spark, idx_dir).stats.num_docs == 12
-    assert spark.read.parquet(f"{idx_dir}/_manifest").count() == 1
+    assert len(snapshot(idx_dir).groups) == 1
