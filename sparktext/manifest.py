@@ -51,6 +51,7 @@ import re
 import shutil
 import time
 import uuid
+import warnings
 from dataclasses import dataclass, field
 from functools import partial
 
@@ -360,8 +361,10 @@ def append_documents(
     :func:`compact_index` to compact.
 
     ``txn=(app_id, version)`` makes retries exactly-once: the batch is
-    skipped when the log already holds a txn of ``app_id`` at
-    ``version`` or later (a streaming sink passes its batch id). Without
+    skipped, with a warning, when the log already holds a txn of
+    ``app_id`` at ``version`` or later (a streaming sink passes its
+    batch id). The txn alone decides: identical content under new
+    metadata, or under a new txn version, is a new batch. Without
     a txn every call appends. A crash before the commit leaves only
     unreferenced files, so a plain retry is safe then; only a retry
     after a commit the caller never saw needs the txn.
@@ -381,7 +384,13 @@ def append_documents(
     def attempt(snap: Snapshot) -> dict | None:
         if snap.version < 0:
             raise ValueError(f"{index_dir!r} holds no index; build it first")
-        if n_new == 0 or (txn is not None and snap.txns.get(txn[0], -1) >= txn[1]):
+        if n_new == 0:
+            return None
+        if txn is not None and snap.txns.get(txn[0], -1) >= txn[1]:
+            warnings.warn(
+                f"append to {index_dir!r} skipped: txn {txn[0]!r} version {txn[1]} is "
+                f"already committed (a crash retry or a replayed batch)", stacklevel=4,
+            )
             return None
         t0 = time.time()
         base_doc, base_seg = snap.next["doc"], snap.next["segment"]

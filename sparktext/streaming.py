@@ -13,8 +13,9 @@ sink is exactly-once end to end (Delta Lake's idempotent-writer design):
   exactly one micro-batch id;
 - a batch Spark replays after a crash (the sink committed, the
   checkpoint did not record it) carries the same batch id; the log
-  already holds that txn, so the append is a no-op. A later batch whose
-  content equals an earlier one's has a new batch id and appends.
+  already holds that txn, so the append is a no-op (with a warning). A
+  later batch whose content equals an earlier one's has a new batch id
+  and appends.
 
 The query id is Spark's own, kept in the checkpoint: it survives restarts
 from that checkpoint, and a fresh checkpoint (whose batch ids restart at

@@ -1,5 +1,6 @@
 """A12: persisted layout, commit log, resume, lineage, incremental append."""
 
+import json
 import os
 import shutil
 import tempfile
@@ -336,7 +337,8 @@ def test_append_retry_after_postcommit_crash(spark, micro_corpus, micro_index, t
     append_documents(spark, tmpdir, second, num_segments=2, txn=("feed", 0))
     version = snapshot(tmpdir).version
 
-    idx = append_documents(spark, tmpdir, second, num_segments=2, txn=("feed", 0))
+    with pytest.warns(UserWarning, match="already committed"):
+        idx = append_documents(spark, tmpdir, second, num_segments=2, txn=("feed", 0))
     assert idx.stats.num_docs == 12 and snapshot(tmpdir).version == version
     assert _topk(idx, "heavy") == _topk(micro_index, "heavy")
     assert _topk(idx, "apple banana") == _topk(micro_index, "apple banana")
@@ -347,6 +349,35 @@ def test_append_retry_after_postcommit_crash(spark, micro_corpus, micro_index, t
     idx4 = append_documents(spark, tmpdir, moved, num_segments=2)
     assert idx4.stats.num_docs == 24
     assert len(snapshot(tmpdir).groups) == 4
+
+
+def test_append_skip_warns_and_metadata_change_appends(spark, micro_corpus, tmpdir):
+    """The replay skip is LOUD, and it never swallows a batch whose
+    content matches but whose metadata differs: only the txn marks a
+    replay, so the same content under new repo/path metadata appends."""
+    from sparktext.build import build_index
+    from sparktext.manifest import append_documents, snapshot
+
+    first, second = _halves(micro_corpus)
+    build_index(spark, first, num_segments=2, index_dir=tmpdir, num_groups=1)
+    append_documents(spark, tmpdir, second, num_segments=2, txn=("feed", 0))
+    version = snapshot(tmpdir).version
+
+    # exact replay (same content, metadata and txn): skipped, loudly
+    with pytest.warns(UserWarning, match="crash retry"):
+        idx = append_documents(spark, tmpdir, second, num_segments=2, txn=("feed", 0))
+    assert idx.stats.num_docs == 12 and snapshot(tmpdir).version == version
+
+    # same CONTENT under different metadata: a real new batch — appends
+    moved = second.withColumn("repo", F.lit("mirror")).withColumn(
+        "path", F.concat(F.lit("mirror/"), F.col("path"))
+    )
+    idx2 = append_documents(spark, tmpdir, moved, num_segments=2, txn=("feed", 1))
+    assert idx2.stats.num_docs == 18
+    snap = snapshot(tmpdir)
+    assert snap.version == version + 1 and len(snap.groups) == 3
+    fps = [s["fingerprint"] for s in snap.groups.values()]
+    assert len(set(fps)) == 3
 
 
 def test_compact_index_roundtrip(spark, micro_corpus, micro_index, tmpdir):
@@ -433,12 +464,14 @@ def test_append_recovers_torn_compaction_swap(spark, micro_corpus, micro_index, 
     assert _disk_files(tmpdir) == snapshot(tmpdir).files
 
 
-def _race_at_commit(monkeypatch):
+def _race_at_commit(monkeypatch, first=None):
     """Hold the first two commit attempts until both writers reach
-    theirs, so they race for the same version; returns the versions
+    theirs, so they race for the same version; with ``first`` (a commit
+    ``op``) that writer's link goes first and wins. Returns the versions
     attempted."""
     real = manifest._commit
     barrier = threading.Barrier(2, timeout=300)
+    won = threading.Event()
     lock = threading.Lock()
     versions = []
 
@@ -446,9 +479,17 @@ def _race_at_commit(monkeypatch):
         with lock:
             versions.append(version)
             first_two = len(versions) <= 2
-        if first_two:
-            barrier.wait()
-        return real(index_dir, version, actions)
+        if not first_two:
+            return real(index_dir, version, actions)
+        barrier.wait()
+        if first is None:
+            return real(index_dir, version, actions)
+        if actions["op"] != first:
+            assert won.wait(timeout=300)
+        try:
+            return real(index_dir, version, actions)
+        finally:
+            won.set()
 
     monkeypatch.setattr(manifest, "_commit", racing_commit)
     return versions
@@ -498,26 +539,48 @@ def test_concurrent_appends_both_land(spark, micro_corpus, micro_index, tmpdir, 
     assert _disk_files(tmpdir) == snapshot(tmpdir).files
 
 
+def _log_commits(d):
+    """Every commit of ``d``'s log, in version order."""
+    log = os.path.join(d, manifest._LOG)
+    commits = []
+    for n in sorted(filter(manifest._COMMIT_NAME.fullmatch, os.listdir(log))):
+        with open(os.path.join(log, n)) as f:
+            commits.append(json.load(f))
+    return commits
+
+
 def test_append_races_compaction(spark, micro_corpus, micro_index, tmpdir, monkeypatch):
-    """An append and a compaction race for the same version: whichever
-    loses redoes its work on the winner's snapshot, so the batch lands
-    once and the compaction covers what it read."""
+    """An append and a compaction race for the same version, each side
+    winning once: the loser redoes its work on the winner's snapshot, so
+    the batch lands once and the compaction covers what it read."""
     from sparktext.build import build_index
-    from sparktext.manifest import append_documents, compact_index, load_index, snapshot
+    from sparktext.manifest import (append_documents, compact_index, load_index,
+                                    snapshot, vacuum)
 
     first, second = _halves(micro_corpus)
-    build_index(spark, first, num_segments=2, index_dir=tmpdir, num_groups=2)
-    read = snapshot(tmpdir).files
-    versions = _race_at_commit(monkeypatch)
-    with ThreadPoolExecutor(2) as pool:
-        futures = [pool.submit(compact_index, spark, tmpdir, 1),
-                   pool.submit(append_documents, spark, tmpdir, second, 2)]
-        for fut in futures:
-            fut.result(timeout=600)
-    assert versions == [2, 2, 3]
-    _assert_all_docs_once(load_index(spark, tmpdir), micro_index)
-    # unreferenced now: only the files compaction removed (until vacuum)
-    assert _disk_files(tmpdir) == snapshot(tmpdir).files | read
+    for winner, loser in (("compact", "append"), ("append", "compact")):
+        d = os.path.join(tmpdir, winner)
+        build_index(spark, first, num_segments=2, index_dir=d, num_groups=2)
+        read = snapshot(d).files
+        with pytest.MonkeyPatch.context() as mp:
+            versions = _race_at_commit(mp, first=winner)
+            with ThreadPoolExecutor(2) as pool:
+                futures = [pool.submit(compact_index, spark, d, 1),
+                           pool.submit(append_documents, spark, d, second, 2)]
+                for fut in futures:
+                    fut.result(timeout=600)
+        assert versions == [2, 2, 3], winner
+        commits = _log_commits(d)
+        assert [c["op"] for c in commits[2:]] == [winner, loser]
+        snap = snapshot(d)
+        _assert_all_docs_once(load_index(spark, d), micro_index)
+        # the compaction removed everything it read, and the loser
+        # deleted its first attempt: every file on disk was committed
+        removed = _disk_files(d) - snap.files
+        assert read <= removed
+        assert _disk_files(d) == set().union(*(c.get("add", []) for c in commits))
+        vacuum(d)
+        assert _disk_files(d) == snap.files
 
 
 def _crash_scenario(name, spark, corpus, template):
